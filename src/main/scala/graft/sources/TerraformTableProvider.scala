@@ -30,7 +30,7 @@ import scala.jdk.CollectionConverters._
   *
   * The connector is the DSv2 restatement of the reference's plugin
   * registration (`/root/reference/terraform/plugin.go:19-38`): discovered
-  * files bin-packed into byte-budgeted InputPartitions (the parent→child
+  * files bin-packed into InputPartitions (the parent→child
   * hydrate analog, SURVEY §1.1, with small files amortized per task),
   * `Builders.rowsForFile` running on executors, and the
   * reference's single pushed-down qual — `path = '…'` — pruning the file
@@ -116,33 +116,29 @@ object TerraformTableProvider {
   private[sources] def schemaFor(table: String): StructType =
     StructType(tables(table)._2.map { case (n, dt, _) => StructField(n, dt, nullable = true) })
 
-  /** Bin discovered files into input partitions, Spark's own FilePartition
-    * policy restated for this source: each file is costed at
-    * `len + openCostInBytes`, the per-partition budget is
-    * `min(maxPartitionBytes, max(openCost, totalCost / minPartitions))`,
-    * and files are packed first-fit in size-descending order. 10⁷ tiny
-    * configuration files therefore land in ~minPartitions bins instead of
-    * 10⁷ microsecond tasks, while a handful of large plan/state JSONs
-    * still spread across the cluster. */
+  /** Bin discovered files into input partitions under the scan rule the
+    * batch views use ([[Terraform.scanPartitions]]): `n` bins, filled in
+    * size-descending order, each file going to the bin with the least
+    * cost so far. A file costs `len + openCostInBytes`, so tiny files
+    * balance by count and large ones by bytes. 10⁷ tiny configuration
+    * files therefore land in one bin per core, not 10⁷ microsecond tasks,
+    * while a handful of large plan/state JSONs still spread across the
+    * cluster. A file costing more than an even share is placed while a
+    * bin is still empty, and nothing joins it: it gets its own bin. */
   private[sources] def packPartitions(files: Seq[(String, String, Long)],
       maxPartitionBytes: Long, openCostInBytes: Long,
       minPartitions: Int): Array[InputPartition] = {
-    if (files.isEmpty) return Array.empty
-    val totalCost = files.iterator.map(_._3 + openCostInBytes).sum
-    val budget = math.min(maxPartitionBytes,
-      math.max(openCostInBytes, totalCost / math.max(1, minPartitions)))
-    val out = Array.newBuilder[InputPartition]
-    var cur = List.empty[(String, String)]
-    var curCost = 0L
+    val n = Terraform.scanPartitions(files.size, files.iterator.map(_._3).sum,
+      maxPartitionBytes, minPartitions)
+    val bins = Array.fill(n)(List.newBuilder[(String, String)])
+    val byCost = new java.util.PriorityQueue[(Long, Int)](math.max(1, n), Ordering[(Long, Int)])
+    bins.indices.foreach(i => byCost.add((0L, i)))
     files.sortBy(f => (-f._3, f._1)).foreach { case (p, k, len) =>
-      val cost = len + openCostInBytes
-      if (cur.nonEmpty && curCost + cost > budget) {
-        out += TfFilePartition(cur.reverse); cur = Nil; curCost = 0L
-      }
-      cur = (p, k) :: cur; curCost += cost
+      val (cost, i) = byCost.poll()
+      bins(i) += ((p, k))
+      byCost.add((cost + len + openCostInBytes, i))
     }
-    if (cur.nonEmpty) out += TfFilePartition(cur.reverse)
-    out.result()
+    bins.map(_.result()).filter(_.nonEmpty).map(TfFilePartition(_): InputPartition)
   }
 
   /** Configured sources per kind: positional `.load(path)` paths count as
@@ -288,16 +284,11 @@ private final class TerraformScan(table: String, options: CaseInsensitiveStringM
   }
 
   private def pack(spark: SparkSession,
-      files: Seq[(String, String, Long)]): Array[InputPartition] = {
-    def bytesConf(key: String, dflt: Long): Long =
-      spark.conf.getOption(key)
-        .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-        .getOrElse(dflt)
+      files: Seq[(String, String, Long)]): Array[InputPartition] =
     TerraformTableProvider.packPartitions(files,
-      maxPartitionBytes = bytesConf("spark.sql.files.maxPartitionBytes", 128L << 20),
-      openCostInBytes = bytesConf("spark.sql.files.openCostInBytes", 4L << 20),
+      maxPartitionBytes = spark.sessionState.conf.filesMaxPartitionBytes,
+      openCostInBytes = spark.sessionState.conf.filesOpenCostInBytes,
       minPartitions = spark.sparkContext.defaultParallelism)
-  }
 
   private def readerFactory(spark: SparkSession): PartitionReaderFactory = {
     // executor-side FS access needs the driver's Hadoop conf (fs.s3a.impl
@@ -310,9 +301,9 @@ private final class TerraformScan(table: String, options: CaseInsensitiveStringM
     new TerraformReaderFactory(table, required, bc, ignoreMissing)
   }
 
-  /** Discovery at planning time, then the survivors are bin-packed into
-    * byte-budgeted partitions (TerraformTableProvider.packPartitions) so
-    * a corpus of tiny files doesn't become one task per file. */
+  /** Discovery at planning time, then the survivors are bin-packed
+    * (TerraformTableProvider.packPartitions) so a corpus of tiny files
+    * doesn't become one task per file. */
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
     pack(spark,
@@ -414,8 +405,8 @@ private final class TerraformReaderFactory(table: String, required: StructType,
         // span column, skip span recovery / source slicing in the parse
         val needSpans = required.fieldNames
           .exists(Set("start_line", "end_line", "source"))
-        // one packed bin of files, parsed lazily in sequence — a bin never
-        // holds more than the byte budget, so per-task memory stays bounded
+        // one packed bin of files, parsed lazily in sequence — one file's
+        // content at a time, so per-task memory stays bounded
         fp.files.iterator.flatMap { case (path, kind) =>
           // a file can vanish between planning-time listing and this read
           // (watched corpora churn): honor spark.sql.files.ignoreMissingFiles

@@ -1,18 +1,24 @@
 package graft.tf
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 /** Spark-facing surface: file discovery → distributed parse → the seven
   * published Terraform tables as DataFrames / temp views.
   *
   * Scale design (north star: 100 TB corpora on a 1000-executor cluster):
-  *   - discovery uses Spark's `binaryFile` source, so listing AND reading
-  *     are distributed and partitioned by Spark's file-splitting machinery
-  *     (maxPartitionBytes); nothing file-sized ever sits on the driver;
-  *   - the parse is one `mapPartitions`-style flatMap over file contents
-  *     emitting the superset TfRow — one pass serves all seven tables
-  *     (the reference parses each file once per table, single-threaded);
+  *   - discovery lists each source once on the driver and reads through
+  *     Spark's `binaryFile` source, so reading is distributed and nothing
+  *     file-sized ever sits on the driver;
+  *   - the parse is one flatMap over file contents emitting the superset
+  *     TfRow — one pass serves all seven tables (the reference parses
+  *     each file once per table, single-threaded);
+  *   - the parse runs, and its rows are cached, in [[scanPartitions]]
+  *     partitions — `min(files, max(defaultParallelism,
+  *     ceil(bytes / maxPartitionBytes)))` — not in Spark's open-cost
+  *     splits (see there for why);
   *   - each table is filter + projection over the cached rows Dataset, so
   *     Catalyst pushes column pruning and predicates (`path = '…'`
   *     pruning falls out of the lazy plan — A2 for free);
@@ -69,26 +75,33 @@ object Terraform {
 
     val parse = udf(SpanElision.parseWithSpans).withName(SpanElision.ParseName)
 
-    def read(globsCfg: Seq[String], kind: String): Dataset[TfRow] = {
-      // remote-source surface (docs/index.md:103-236): git::/github.com/
-      // s3:: paths resolve to local checkouts / s3a:// globs first; bare
-      // directory entries are skipped (utils.go:87-90)
-      val globs = resolveGlobs(globsCfg)
-      // ONE driver-side listing: glob each source ourselves and feed the
-      // matched statuses straight into the scan (PreListedFileIndex).
-      // `spark.read.load(globs)` would glob AND re-list inside Spark —
-      // two sequential passes that are the A1 scale-killer on a 10⁷-file
-      // object store. The FileSystem is resolved PER GLOB: a scheme-
-      // qualified glob (s3a://…, hdfs://…) must use its own FS — the
-      // session default is file:/// (reference S3 branch: utils.go:143).
-      // Sources matching nothing yield an empty result instead of an
-      // error (utils.go:116-119,148-151): globStatus returns null/empty
-      // and the glob simply contributes no statuses.
-      val statuses = globOnce(spark.sparkContext.hadoopConfiguration, globs)
+    // remote-source surface (docs/index.md:103-236): git::/github.com/
+    // s3:: paths resolve to local checkouts / s3a:// globs first; bare
+    // directory entries are skipped (utils.go:87-90).
+    // ONE driver-side listing: glob each source ourselves and feed the
+    // matched statuses straight into the scan (PreListedFileIndex).
+    // `spark.read.load(globs)` would glob AND re-list inside Spark —
+    // two sequential passes that are the A1 scale-killer on a 10⁷-file
+    // object store. The FileSystem is resolved PER GLOB: a scheme-
+    // qualified glob (s3a://…, hdfs://…) must use its own FS — the
+    // session default is file:/// (reference S3 branch: utils.go:143).
+    // Sources matching nothing yield an empty result instead of an
+    // error (utils.go:116-119,148-151): globStatus returns null/empty
+    // and the glob simply contributes no statuses.
+    val conf = spark.sparkContext.hadoopConfiguration
+    val sources = Seq(
+      (paths.configurationFilePaths ++ paths.paths, FileKind.Config),
+      (paths.planFilePaths, FileKind.Plan),
+      (paths.stateFilePaths, FileKind.State)).map { case (cfg, kind) =>
+        val globs = resolveGlobs(cfg)
+        (globs, globOnce(conf, globs), kind)
+      }
+
+    def read(globs: Seq[String], statuses: Seq[FileStatus], kind: String): Dataset[TfRow] =
       if (statuses.isEmpty) spark.emptyDataset[TfRow]
       else {
         val base = graft.sources.PreListedFileIndex.binaryFileScan(
-          spark, statuses.toArray, globs.map(new org.apache.hadoop.fs.Path(_)))
+          spark, statuses.toArray, globs.map(new Path(_)))
         val scan = base
           .withColumn("kind",
             when(col("path").endsWith(".tfstate"), FileKind.State).otherwise(kind))
@@ -103,15 +116,36 @@ object Terraform {
             fields.map(f => col(s"r.$f")): _*)
           .as[TfRow]
       }
-    }
 
     // BY NAME: the empty-source branch's column order (case-class) differs
     // from the non-empty branch's path-first projection — a positional
     // unionAll would silently swap string columns whenever one source list
     // is empty and another is not
-    read(paths.configurationFilePaths ++ paths.paths, FileKind.Config)
-      .unionByName(read(paths.planFilePaths, FileKind.Plan))
-      .unionByName(read(paths.stateFilePaths, FileKind.State))
+    val all = sources.map((read _).tupled).reduce(_ unionByName _)
+    // one coalesce over the union, not one per source: coalescing each
+    // source separately leaves up to three partitions per core. Narrow, so
+    // the parse still runs in these n tasks, and a pushed `path =`
+    // predicate still reaches the scan below it.
+    val files = sources.flatMap(_._2)
+    val n = scanPartitions(files.size, files.iterator.map(_.getLen).sum,
+      spark.sessionState.conf.filesMaxPartitionBytes, spark.sparkContext.defaultParallelism)
+    if (n == 0) all else all.coalesce(n)
+  }
+
+  /** The partition rule of the Terraform scan, shared by [[rows]] and the
+    * DataSource V2 provider (graft.sources.TerraformTableProvider):
+    * `min(files, max(parallelism, ceil(bytes / maxPartitionBytes)))`.
+    * A corpus of small files gets one partition per core; at corpus scale
+    * each partition holds about `maxPartitionBytes` of files. Spark's own
+    * split planner charges every file `len + openCostInBytes` instead, so
+    * with the 4 MB default open cost and a 16 MB split cap 600 one-KB
+    * files became ~150 splits of three files — ~150 tasks of a few KB per
+    * scan, where scheduling, not parsing, was the cost. */
+  private[graft] def scanPartitions(files: Int, bytes: Long,
+      maxPartitionBytes: Long, parallelism: Int): Int = {
+    val split = math.max(1L, maxPartitionBytes)
+    val byBytes = (bytes + split - 1) / split
+    math.min(files.toLong, math.max(parallelism.toLong, byBytes)).toInt
   }
 
   /** The single listing pass behind discovery: glob each resolved source
@@ -124,43 +158,57 @@ object Terraform {
     * InMemoryFileIndex behavior. Shared by [[rows]] and the DataSource
     * V2 provider (graft.sources.TerraformTableProvider). */
   private[graft] def globOnce(conf: org.apache.hadoop.conf.Configuration,
-      globs: Seq[String]): Seq[org.apache.hadoop.fs.FileStatus] =
+      globs: Seq[String]): Seq[FileStatus] =
     globs.flatMap { g =>
       // Hadoop's globStatus has NO recursive `**` (each path component
       // degrades to `*`) — patterns containing it take ONE recursive
-      // listing (a single LIST round on object stores) filtered by a
-      // doublestar-style matcher, reproducing go-getter's glob semantics
+      // listing ([[listTree]]; a single LIST round on object stores)
+      // filtered by a doublestar-style matcher, reproducing go-getter's
+      // glob semantics
       if (g.contains("**")) recursiveGlob(conf, g)
       else {
-        val hp = new org.apache.hadoop.fs.Path(g)
+        val hp = new Path(g)
         Option(hp.getFileSystem(conf).globStatus(hp)).toSeq.flatten
       }
     }.filter(_.isFile)
       .distinctBy(_.getPath.toString)
 
   private def recursiveGlob(conf: org.apache.hadoop.conf.Configuration,
-      glob: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+      glob: String): Seq[FileStatus] = {
     val firstWild = glob.indexWhere(c => "*?[{".contains(c))
     val baseEnd = glob.lastIndexOf('/', firstWild)
     val base = if (baseEnd <= 0) "/" else glob.substring(0, baseEnd)
     val re = globRegex(glob)
     try {
-      val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(conf)
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(base), true)
-      val out = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-      while (it.hasNext) {
-        val st = it.next()
-        // listings come back scheme-qualified; the configured glob may be
-        // scheme-less — accept a match against either spelling
-        if (re.matcher(st.getPath.toString).matches() ||
-            re.matcher(st.getPath.toUri.getPath).matches()) out += st
-      }
-      out.result()
+      val basePath = new Path(base)
+      // listings come back scheme-qualified; the configured glob may be
+      // scheme-less — accept a match against either spelling
+      listTree(basePath.getFileSystem(conf), basePath).filter { st =>
+        re.matcher(st.getPath.toString).matches() ||
+          re.matcher(st.getPath.toUri.getPath).matches()
+      }.toSeq
     } catch {
       // a missing base contributes nothing, like globStatus' null
       case _: java.io.FileNotFoundException => Seq.empty
     }
   }
+
+  /** Every file under `base`, recursively. On the local filesystem this is
+    * a `listStatus` walk: `listFiles(recursive)` builds a
+    * `LocatedFileStatus` per file, and the raw local FS loads each one's
+    * permissions by forking a shell (milliseconds a file). Other filesystems
+    * keep the single recursive listing — one LIST round on an object
+    * store, where a per-directory walk would pay a round trip per
+    * directory. */
+  private[tf] def listTree(fs: FileSystem, base: Path): Iterator[FileStatus] =
+    if (fs.getScheme == "file")
+      fs.listStatus(base).iterator.flatMap { st =>
+        if (st.isDirectory) listTree(fs, st.getPath) else Iterator.single(st)
+      }
+    else {
+      val it = fs.listFiles(base, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+    }
 
   /** doublestar-style glob → regex: `**``/` spans zero or more directory
     * levels, trailing `**` spans everything, `*` and `?` stay within one
@@ -214,7 +262,7 @@ object Terraform {
     * [[comparableSpelling]] hold. */
   private[graft] def globMatches(glob: String, path: String): Boolean =
     globRegex(glob).matcher(path).matches() || (glob.startsWith("file:") &&
-      globRegex(new org.apache.hadoop.fs.Path(glob).toUri.getPath).matcher(path).matches())
+      globRegex(new Path(glob).toUri.getPath).matcher(path).matches())
 
   /** Streaming twin of [[rows]] — the real analog of the reference's
     * file-watch re-query (`steampipe:"watch"` tags, connection_config.go:
@@ -355,7 +403,12 @@ object Terraform {
     provider(r).createOrReplaceTempView("terraform_provider")
     variable(r).createOrReplaceTempView("terraform_variable")
     diagnostics(r).createOrReplaceTempView("terraform_diagnostics")
-    registerFunctions(spark)
+    // once per session: re-registering on every refresh replaces seven
+    // functions and logs a warning for each
+    val registry = spark.sessionState.functionRegistry
+    if (!shims.forall { case (name, _) =>
+        registry.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)) })
+      registerFunctions(spark)
     r
   }
 
@@ -392,56 +445,56 @@ object Terraform {
     register(spark, prev._1)
   }
 
-  /** Postgres/SQLite-compat shims used by the reference's documented
-    * queries (SURVEY §2B): jsonb_pretty, json_get/json_get_str (the ->/->>
-    * operators), json_extract (sqlite dialect). All other capabilities are
-    * native Spark SQL. */
   /** Postgres array-index semantics for `->`/`->>`: a negative integer
     * counts from the end (`'[1,2,3]' -> -1` is `3`); out of range → None. */
   private def arrIdx(items: Vector[JValue], key: String): Option[JValue] =
     key.toIntOption.flatMap { i => items.lift(if (i < 0) items.length + i else i) }
 
-  def registerFunctions(spark: SparkSession): Unit = {
-    spark.udf.register("jsonb_pretty", (s: String) =>
+  /** Postgres/SQLite-compat shims used by the reference's documented
+    * queries (SURVEY §2B), by name: jsonb_pretty, json_get/json_get_str
+    * (the ->/->> operators), json_extract (sqlite dialect). All other
+    * capabilities are native Spark SQL. */
+  private lazy val shims: Seq[(String, UserDefinedFunction)] = Seq(
+    "jsonb_pretty" -> udf((s: String) =>
       if (s == null) null
-      else Json.parseOpt(s).map(pretty(_, 0)).getOrElse(s))
+      else Json.parseOpt(s).map(pretty(_, 0)).getOrElse(s)),
     // -> : JSON field access returning JSON text
-    spark.udf.register("json_get", (s: String, key: String) =>
+    "json_get" -> udf((s: String, key: String) =>
       if (s == null || key == null) null
       else Json.parseOpt(s).flatMap {
         case o: JObj => o.get(key).map(_.render)
         case JArr(items) => arrIdx(items, key).map(_.render)
         case _ => None
-      }.orNull)
+      }.orNull),
     // jsonb_array_elements: JSON array → rows (lenient: a single object
     // becomes a 1-element array, matching kics's single-vs-repeated block
     // shape so documented queries work on both)
-    spark.udf.register("json_array_elements", (s: String) =>
+    "json_array_elements" -> udf((s: String) =>
       if (s == null) Array.empty[String]
       else Json.parseOpt(s) match {
         case Some(JArr(items)) => items.map(_.render).toArray
         case Some(o: JObj)     => Array(o.render)
         case _                 => Array.empty[String]
-      })
+      }),
     // ->> : JSON field access returning text (strings unquoted)
-    spark.udf.register("json_get_str", (s: String, key: String) =>
+    "json_get_str" -> udf((s: String, key: String) =>
       if (s == null || key == null) null
       else Json.parseOpt(s).flatMap {
         case o: JObj => o.get(key).map { case JStr(v) => v; case v => v.render }
         case JArr(items) =>
           arrIdx(items, key).map { case JStr(v) => v; case v => v.render }
         case _ => None
-      }.orNull)
+      }.orNull),
     // sqlite-dialect json_extract (every `sql+sqlite` doc example, e.g.
     // docs/tables/terraform_resource.md:93,120): navigates a `$.a.b[0]`
     // path; strings come back unquoted (sqlite SQL-value semantics),
     // objects/arrays as JSON text, missing path → NULL
-    spark.udf.register("json_extract", (s: String, path: String) =>
+    "json_extract" -> udf((s: String, path: String) =>
       if (s == null || path == null) null
       else Json.parseOpt(s).flatMap(jsonPath(_, path)).map {
         case JStr(v) => v
         case v       => v.render
-      }.orNull)
+      }.orNull),
     // sqlite json_each row stream (docs/tables/terraform_data_source.md:97):
     // PgDialect rewrites `json_each(x, p) as f` to
     // `explode(json_each_values(x, p)) as f`, each row carrying sqlite's
@@ -451,17 +504,17 @@ object Terraform {
     // `f.key`/`f.type` work. Same single-object leniency as
     // json_array_elements (one HCL block renders as an object, repeated
     // blocks as an array — both must iterate).
-    spark.udf.register("json_each_values", (s: String, path: String) =>
+    "json_each_values" -> udf((s: String, path: String) =>
       if (s == null || path == null) Array.empty[JsonEachRow]
       else Json.parseOpt(s).flatMap(jsonPath(_, path)).map {
         case JArr(items) =>
           items.zipWithIndex.map { case (i, ix) => jsonEachRow(Some(ix), i, path) }.toArray
         case v => Array(jsonEachRow(None, v, path))
-      }.getOrElse(Array.empty[JsonEachRow]))
+      }.getOrElse(Array.empty[JsonEachRow])),
     // sqlite dynamic truthiness for predicate-position json_extract (see
     // SqliteDialect): sqlite's json_extract returns 1/0 for JSON booleans
     // and WHERE coerces text via numeric-prefix parse (non-numeric → 0)
-    spark.udf.register("sqlite_truthy", (s: String) =>
+    "sqlite_truthy" -> udf((s: String) =>
       if (s == null) null
       else s.trim match {
         case "true"  => java.lang.Boolean.TRUE
@@ -469,8 +522,10 @@ object Terraform {
         case v =>
           val m = "^[+-]?(\\d+(\\.\\d*)?|\\.\\d+)([eE][+-]?\\d+)?".r.findPrefixOf(v)
           java.lang.Boolean.valueOf(m.exists(_.toDouble != 0.0))
-      })
-  }
+      }))
+
+  def registerFunctions(spark: SparkSession): Unit =
+    shims.foreach { case (name, f) => spark.udf.register(name, f) }
 
   /** One `json_each` output row: sqlite's virtual-table schema minus the
     * always-NULL `parent`. Column values are strings (our JSON columns are

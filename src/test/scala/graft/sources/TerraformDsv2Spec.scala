@@ -99,16 +99,16 @@ class TerraformDsv2Spec extends SparkSpecBase {
     }
     val df = spark.read.format("terraform").load(s"$tmp/*.tf")
     val parts = df.rdd.getNumPartitions
-    // 200 files × (len + 4 MB openCost) / 32 cores ≈ 25 MB budget → ~6
-    // files per bin: far fewer tasks than files, but still parallel
+    // 200 files of a few bytes → one bin per core (Terraform.scanPartitions):
+    // far fewer tasks than files, but still parallel
     assert(parts <= 64, s"$m tiny files should pack into ≤ 64 partitions, got $parts")
     assert(parts > 1, "packing must not collapse a parallel read to one task")
     // row parity: every file's resource present exactly once
     assert(df.count() == m)
     assert(df.select("name").distinct().count() == m)
 
-    // pure packing policy: budget caps at maxPartitionBytes, floor at one
-    // file per bin even when a single file exceeds the budget
+    // pure packing policy: bins are min(files, max(cores, bytes / split)),
+    // and a file larger than an even share gets a bin of its own
     val files = (0 until 10).map(i => (s"/f$i", "config", 10L))
     val packed = TerraformTableProvider.packPartitions(files,
       maxPartitionBytes = 1L << 30, openCostInBytes = 100L, minPartitions = 2)

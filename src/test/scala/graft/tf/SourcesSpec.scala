@@ -266,6 +266,33 @@ class SourcesSpec extends SparkSpecBase {
     assert(!Terraform.globRegex("/x/*.tf").matcher("/x/a/b.tf").matches())
   }
 
+  test("recursive discovery: the local listStatus walk lists what listFiles(recursive) lists") {
+    val root = Files.createTempDirectory("graft-walk").toFile
+    Seq("top.tf", "notes.txt", "a/mid.tf", "a/b/deep.tf", "a/x.tf/inner.tf",
+        "a/x.tf/c/leaf.tf", "empty/.keep").foreach { rel =>
+      val f = JPaths.get(root.getPath, rel)
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, "resource \"aws_s3_bucket\" \"b\" {}\n")
+    }
+    Files.createDirectories(JPaths.get(root.getPath, "a", "none"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val base = new org.apache.hadoop.fs.Path(root.getAbsolutePath)
+    val fs = base.getFileSystem(conf)
+    assert(fs.getScheme == "file")
+    val walked = Terraform.listTree(fs, base).map(_.getPath.toString).toSet
+    val listed = {
+      val it = fs.listFiles(base, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString).toSet
+    }
+    assert(walked.size == 7 && walked == listed, s"walk $walked vs listFiles $listed")
+    // the `**` glob descends into the directory named x.tf but never
+    // returns it as a file
+    val matched = Terraform.globOnce(conf, Seq(s"${root.getAbsolutePath}/**/*.tf"))
+      .map(st => st.getPath.toUri.getPath.stripPrefix(root.getAbsolutePath + "/")).toSet
+    assert(matched == Set("top.tf", "a/mid.tf", "a/b/deep.tf", "a/x.tf/inner.tf", "a/x.tf/c/leaf.tf"),
+      s"got $matched")
+  }
+
   test("legacy `paths` connection argument routes as configuration files") {
     // reference connection_config.go:9 — the fourth, deprecated source
     // list; an old steampipe config using it must port verbatim
@@ -324,6 +351,17 @@ class SourcesSpec extends SparkSpecBase {
     assert(spark.table("terraform_resource").count() == 1,
       "views must reflect the newly registered corpus")
     Terraform.register(spark, p) // leave the shared session on fixtures
+  }
+
+  test("refresh keeps the session's shim functions: registered once, not replaced") {
+    val p = Terraform.Paths(configurationFilePaths = Seq(s"${new java.io.File("fixtures").getAbsolutePath}/*.tf"))
+    Terraform.register(spark, p)
+    def builder = spark.sessionState.functionRegistry.lookupFunctionBuilder(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("json_get")).get
+    val before = builder
+    Terraform.refresh(spark)
+    assert(builder eq before, "refresh re-registered the shims")
+    assert(spark.sql("""SELECT json_get('{"a":1}', 'a')""").head.getString(0) == "1")
   }
 
   test("empty Paths resolve the reference's shipped CWD defaults (terraform.spc:23-25)") {
