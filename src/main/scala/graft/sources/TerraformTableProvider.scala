@@ -4,19 +4,19 @@ import graft.tf.{Builders, FileKind, Terraform, TfRow}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter}
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import java.util.{Map => JMap}
+import java.util.{OptionalLong, Map => JMap}
 import scala.jdk.CollectionConverters._
 
 /** DataSource V2 packaging of the seven published tables:
@@ -36,11 +36,17 @@ import scala.jdk.CollectionConverters._
   * reference's single pushed-down qual — `path = '…'` — pruning the file
   * list AT PLANNING TIME (`utils.go:45-58`), so non-matching files are
   * never opened. Column pruning drops unused fields before rows are built.
-  * Discovery shares [[Terraform.globOnce]]'s single listing pass.
+  * Discovery shares [[Terraform.globOnce]]'s single listing pass, runs once
+  * per scan, and reports the matched bytes as the planner's size estimate.
   *
   * Paths given positionally to `.load(p…)` are configuration paths; the
-  * three `…FilePaths` options take comma-separated source strings in the
-  * reference's connection-config grammar (local glob / git:: / s3::).
+  * three `…FilePaths` options take source strings in the reference's
+  * connection-config grammar (local glob / git:: / s3::), comma-separated
+  * or as a JSON array (needed when a source contains a comma, as a `{a,b}`
+  * brace glob does).
+  *
+  * [[Terraform.rows]] reads the same connector through the internal
+  * [[TerraformTableProvider.RowsTable]]: every row, under its TfRow names.
   */
 final class TerraformTableProvider extends TableProvider with DataSourceRegister {
 
@@ -74,7 +80,7 @@ object TerraformTableProvider {
     l("start_line", _.startLine), l("end_line", _.endLine),
     s("source", _.source), s("path", r => Some(r.path)))
 
-  /** table name → (TfRow.table kind, columns). */
+  /** Published table name → (TfRow.table kind, columns). */
   private[sources] val tables: Map[String, (String, Seq[Col])] = Map(
     "terraform_resource" -> ("resource" -> (Seq(
       s("name", _.name), s("type", _.tfType), s("mode", _.mode), s("address", _.address),
@@ -106,15 +112,46 @@ object TerraformTableProvider {
     "terraform_diagnostics" -> ("_error" -> Seq(
       s("path", r => Some(r.path)), s("error", _.description))))
 
+  /** The superset table behind [[Terraform.rows]]: every parsed row, each
+    * TfRow field under its own name, so `.as[TfRow]` binds. Internal: the
+    * catalog publishes [[tables]] only. */
+  private[graft] val RowsTable = "_terraform_rows"
+
+  /** TfRow fields in encoder-schema order, which is constructor order and
+    * so `productElement` order. */
+  private val rowColumns: Seq[Col] =
+    Encoders.product[TfRow].schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      (f.name, f.dataType, (r: TfRow) => internal(r.productElement(i)))
+    }
+
+  /** A TfRow field value as Catalyst stores it. */
+  private def internal(v: Any): Any = v match {
+    case Some(x)   => internal(x)
+    case None      => null
+    case s: String => UTF8String.fromString(s)
+    case x         => x
+  }
+
+  /** table name → (the TfRow.table kind it keeps, None for all; columns). */
+  private[sources] def spec(table: String): (Option[String], Seq[Col]) =
+    if (table == RowsTable) (None, rowColumns)
+    else { val (kind, cols) = tables(table); (Some(kind), cols) }
+
+  /** Columns taken from span recovery: the spans, the block source, and
+    * `validation`, which is regex-extracted from that source. A scan that
+    * reads none of them parses without spans. */
+  private[sources] val spanColumns: Set[String] =
+    Set("start_line", "end_line", "startLine", "endLine", "source", "validation")
+
   private[sources] def tableName(options: CaseInsensitiveStringMap): String = {
     val t = options.getOrDefault("table", "terraform_resource")
-    require(tables.contains(t),
+    require(tables.contains(t) || t == RowsTable,
       s"unknown terraform table '$t' (expected one of ${tables.keys.toSeq.sorted.mkString(", ")})")
     t
   }
 
   private[sources] def schemaFor(table: String): StructType =
-    StructType(tables(table)._2.map { case (n, dt, _) => StructField(n, dt, nullable = true) })
+    StructType(spec(table)._2.map { case (n, dt, _) => StructField(n, dt, nullable = true) })
 
   /** Bin discovered files into input partitions under the scan rule the
     * batch views use ([[Terraform.scanPartitions]]): `n` bins, filled in
@@ -144,26 +181,23 @@ object TerraformTableProvider {
   /** Configured sources per kind: positional `.load(path)` paths count as
     * configuration paths, like the reference's configuration_file_paths. */
   private[sources] def sourcesByKind(options: CaseInsensitiveStringMap): Seq[(String, Seq[String])] = {
-    def split(key: String): Seq[String] =
-      Option(options.get(key)).toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-    val positional =
-      Option(options.get("paths")).toSeq.flatMap { js =>
-        // DataFrameReader encodes multi-path load(p1, p2, …) as a JSON
-        // array — parse it properly (paths may contain commas/quotes).
-        // A plain string here is the reference's legacy `paths` connection
-        // argument (connection_config.go:9) set explicitly as an option:
-        // comma-separated sources, routed as configuration files like the
-        // other three lists.
-        graft.tf.Json.parseOpt(js) match {
-          case Some(graft.tf.JArr(items)) =>
-            items.collect { case graft.tf.JStr(p) => p }
-          case _ => js.split(',').map(_.trim).toSeq
+    // A JSON array of sources: DataFrameReader encodes load(p1, p2, …) as
+    // one, and Terraform.rows passes one, so a source may contain commas or
+    // quotes. Anything else is comma-separated sources, the form users type
+    // (for `paths`, the reference's legacy connection argument,
+    // connection_config.go:9, routed as configuration files).
+    def list(key: String): Seq[String] =
+      Option(options.get(key)).toSeq.flatMap { v =>
+        graft.tf.Json.parseOpt(v) match {
+          case Some(graft.tf.JArr(items)) => items.collect { case graft.tf.JStr(p) => p }
+          case _ => v.split(',').map(_.trim).toSeq
         }
-      }.filter(_.nonEmpty) ++ Option(options.get("path")).toSeq
+      }.filter(_.nonEmpty)
     val configured = Seq(
-      FileKind.Config -> (split("configurationFilePaths") ++ positional),
-      FileKind.Plan -> split("planFilePaths"),
-      FileKind.State -> split("stateFilePaths"))
+      FileKind.Config -> (list("configurationFilePaths") ++ list("paths") ++
+        Option(options.get("path")).toSeq),
+      FileKind.Plan -> list("planFilePaths"),
+      FileKind.State -> list("stateFilePaths"))
     // no sources at all → the reference's shipped CWD defaults
     // (config/terraform.spc:23-25), same all-or-nothing rule as
     // Terraform.Paths.orDefaults
@@ -233,7 +267,8 @@ private final class TerraformScanBuilder(table: String, options: CaseInsensitive
 }
 
 private final class TerraformScan(table: String, options: CaseInsensitiveStringMap,
-    pathEq: Option[String], required: StructType) extends Scan with Batch {
+    pathEq: Option[String], required: StructType)
+    extends Scan with Batch with SupportsReportStatistics {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -301,14 +336,24 @@ private final class TerraformScan(table: String, options: CaseInsensitiveStringM
     new TerraformReaderFactory(table, required, bc, ignoreMissing)
   }
 
+  /** The batch scan's discovery, listed once: the size estimate and the
+    * input partitions both read it. */
+  private lazy val discovered: Seq[(String, String, Long)] =
+    discover(SparkSession.active.sparkContext.hadoopConfiguration)
+      .map(f => (f._1, f._2, f._3))
+
+  /** The matched files' bytes, so the planner can still broadcast a small
+    * Terraform table in a join. */
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def sizeInBytes(): OptionalLong = OptionalLong.of(discovered.iterator.map(_._3).sum)
+    override def numRows(): OptionalLong = OptionalLong.empty()
+  }
+
   /** Discovery at planning time, then the survivors are bin-packed
     * (TerraformTableProvider.packPartitions) so a corpus of tiny files
     * doesn't become one task per file. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
-    pack(spark,
-      discover(spark.sparkContext.hadoopConfiguration).map(f => (f._1, f._2, f._3)))
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    pack(SparkSession.active, discovered)
 
   override def createReaderFactory(): PartitionReaderFactory =
     readerFactory(SparkSession.active)
@@ -393,7 +438,7 @@ private final class TerraformReaderFactory(table: String, required: StructType,
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val fp = partition.asInstanceOf[TfFilePartition]
-    val (kindFilter, cols) = TerraformTableProvider.tables(table)
+    val (kindFilter, cols) = TerraformTableProvider.spec(table)
     val getters = {
       val byName = cols.map { case (n, _, g) => n -> g }.toMap
       required.fields.map(f => byName(f.name))
@@ -401,32 +446,30 @@ private final class TerraformReaderFactory(table: String, required: StructType,
     new PartitionReader[InternalRow] {
       private lazy val rows: Iterator[TfRow] = {
         val conf = bcConf.value.value
-        // span elision, DSv2-native: when column pruning dropped every
-        // span column, skip span recovery / source slicing in the parse
-        val needSpans = required.fieldNames
-          .exists(Set("start_line", "end_line", "source"))
+        // span elision: when column pruning dropped every span-derived
+        // column, skip span recovery / source slicing in the parse
+        val needSpans = required.fieldNames.exists(TerraformTableProvider.spanColumns)
         // one packed bin of files, parsed lazily in sequence — one file's
         // content at a time, so per-task memory stays bounded
         fp.files.iterator.flatMap { case (path, kind) =>
           // a file can vanish between planning-time listing and this read
           // (watched corpora churn): honor spark.sql.files.ignoreMissingFiles
-          // like the binaryFile batch path, surfacing the skip as a
+          // like Spark's file sources, surfacing the skip as a
           // terraform_diagnostics row instead of failing every task retry
-          try {
+          val parsed = try {
             val hp = new Path(path)
             val in = hp.getFileSystem(conf).open(hp)
             val content = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
             finally in.close()
             Builders.rowsForFile(Terraform.stripScheme(path), kind, content,
                 withSpans = needSpans)
-              .iterator.filter(_.table == kindFilter)
           } catch {
             case e: java.io.FileNotFoundException if ignoreMissing =>
-              Iterator.single(TfRow.empty.copy(table = "_error",
+              Seq(TfRow.empty.copy(table = "_error",
                 path = Terraform.stripScheme(path),
                 description = Some(s"missing: ${Option(e.getMessage).getOrElse(path)}")))
-                .filter(_.table == kindFilter)
           }
+          parsed.iterator.filter(r => kindFilter.forall(_ == r.table))
         }
       }
       private var current: TfRow = _

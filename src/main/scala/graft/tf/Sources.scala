@@ -13,7 +13,7 @@ import java.security.MessageDigest
   *     Hadoop globs — listing and reading are distributed.
   *   - **S3** URLs rewrite to `s3a://bucket/prefix/glob` Hadoop URIs: on a
   *     cluster the object store is read directly and in parallel by the
-  *     binaryFile scan — strictly better than the reference's
+  *     terraform scan — strictly better than the reference's
   *     download-then-scan staging (credentials flow through the standard
   *     Hadoop s3a provider chain, the analog of the reference's
   *     AWS_PROFILE handling).

@@ -9,19 +9,22 @@ import org.apache.spark.sql.functions._
   * published Terraform tables as DataFrames / temp views.
   *
   * Scale design (north star: 100 TB corpora on a 1000-executor cluster):
-  *   - discovery lists each source once on the driver and reads through
-  *     Spark's `binaryFile` source, so reading is distributed and nothing
-  *     file-sized ever sits on the driver;
-  *   - the parse is one flatMap over file contents emitting the superset
-  *     TfRow — one pass serves all seven tables (the reference parses
-  *     each file once per table, single-threaded);
+  *   - one batch reader: [[rows]] is a read of the DataSource V2 `terraform`
+  *     connector (graft.sources.TerraformTableProvider), the same reader
+  *     `spark.read.format("terraform")` and the catalog use;
+  *   - discovery lists each source once on the driver; executors open and
+  *     parse the files, so nothing file-sized ever sits on the driver;
+  *   - the parse emits the superset TfRow — one pass serves all seven
+  *     tables (the reference parses each file once per table,
+  *     single-threaded);
   *   - the parse runs, and its rows are cached, in [[scanPartitions]]
   *     partitions — `min(files, max(defaultParallelism,
   *     ceil(bytes / maxPartitionBytes)))` — not in Spark's open-cost
   *     splits (see there for why);
-  *   - each table is filter + projection over the cached rows Dataset, so
-  *     Catalyst pushes column pruning and predicates (`path = '…'`
-  *     pruning falls out of the lazy plan — A2 for free);
+  *   - each table is filter + projection over the cached rows Dataset; on
+  *     an uncached read the connector takes the pruned columns (a scan
+  *     that reads no span column skips span recovery) and a `path = '…'`
+  *     qual, which drops non-matching files before any is opened (A2);
   *   - everything downstream of the parse stays in whole-stage codegen.
   */
 object Terraform {
@@ -60,80 +63,29 @@ object Terraform {
   /** Discover + parse all configured files into the superset row Dataset.
     * Kind routing follows utils.go:38-169: configured kind wins, a
     * `.tfstate` suffix forces state, plan content-sniff happens per-file
-    * in Builders.rowsForFile.
+    * in Builders.rowsForFile. Remote sources (git::, s3::, archives;
+    * docs/index.md:103-236) resolve in [[resolveGlobs]].
     *
-    * Shape matters for pushdown (A2): the parse is an `explode(udf(...))`
-    * generator over the scan's pass-through `path` column — NOT an opaque
-    * typed flatMap — so a `path = '…'` predicate pushes below the
-    * Generate all the way into the binaryFile scan (which supports path
-    * filters): non-matching files are neither read nor parsed, the exact
-    * analog of the reference's qual short-circuit (utils.go:45-58). */
+    * Lazy: the connector lists and parses when the Dataset is planned and
+    * run. The source lists go over as JSON arrays, so a `{a,b}` glob keeps
+    * its comma. A file that vanishes between listing and reading fails the
+    * read, or, under `spark.sql.files.ignoreMissingFiles`, becomes a
+    * `terraform_diagnostics` row. */
   def rows(spark: SparkSession, paths0: Paths): Dataset[TfRow] = {
     import spark.implicits._
     val paths = paths0.orDefaults
-    SpanElision.install(spark)
-
-    val parse = udf(SpanElision.parseWithSpans).withName(SpanElision.ParseName)
-
-    // remote-source surface (docs/index.md:103-236): git::/github.com/
-    // s3:: paths resolve to local checkouts / s3a:// globs first; bare
-    // directory entries are skipped (utils.go:87-90).
-    // ONE driver-side listing: glob each source ourselves and feed the
-    // matched statuses straight into the scan (PreListedFileIndex).
-    // `spark.read.load(globs)` would glob AND re-list inside Spark —
-    // two sequential passes that are the A1 scale-killer on a 10⁷-file
-    // object store. The FileSystem is resolved PER GLOB: a scheme-
-    // qualified glob (s3a://…, hdfs://…) must use its own FS — the
-    // session default is file:/// (reference S3 branch: utils.go:143).
-    // Sources matching nothing yield an empty result instead of an
-    // error (utils.go:116-119,148-151): globStatus returns null/empty
-    // and the glob simply contributes no statuses.
-    val conf = spark.sparkContext.hadoopConfiguration
-    val sources = Seq(
-      (paths.configurationFilePaths ++ paths.paths, FileKind.Config),
-      (paths.planFilePaths, FileKind.Plan),
-      (paths.stateFilePaths, FileKind.State)).map { case (cfg, kind) =>
-        val globs = resolveGlobs(cfg)
-        (globs, globOnce(conf, globs), kind)
-      }
-
-    def read(globs: Seq[String], statuses: Seq[FileStatus], kind: String): Dataset[TfRow] =
-      if (statuses.isEmpty) spark.emptyDataset[TfRow]
-      else {
-        val base = graft.sources.PreListedFileIndex.binaryFileScan(
-          spark, statuses.toArray, globs.map(new Path(_)))
-        val scan = base
-          .withColumn("kind",
-            when(col("path").endsWith(".tfstate"), FileKind.State).otherwise(kind))
-        val exploded = scan
-          .select(col("path"), explode(parse(col("path"), col("kind"), col("content"))).as("r"))
-        // field names from the encoder schema (the same source of truth
-        // the struct was built from) — no throwaway plan analysis
-        val fields = org.apache.spark.sql.Encoders.product[TfRow]
-          .schema.fieldNames.filter(_ != "path")
-        exploded
-          .select(Seq(expr("regexp_replace(path, '^file:', '')").as("path")) ++
-            fields.map(f => col(s"r.$f")): _*)
-          .as[TfRow]
-      }
-
-    // BY NAME: the empty-source branch's column order (case-class) differs
-    // from the non-empty branch's path-first projection — a positional
-    // unionAll would silently swap string columns whenever one source list
-    // is empty and another is not
-    val all = sources.map((read _).tupled).reduce(_ unionByName _)
-    // one coalesce over the union, not one per source: coalescing each
-    // source separately leaves up to three partitions per core. Narrow, so
-    // the parse still runs in these n tasks, and a pushed `path =`
-    // predicate still reaches the scan below it.
-    val files = sources.flatMap(_._2)
-    val n = scanPartitions(files.size, files.iterator.map(_.getLen).sum,
-      spark.sessionState.conf.filesMaxPartitionBytes, spark.sparkContext.defaultParallelism)
-    if (n == 0) all else all.coalesce(n)
+    def sources(globs: Seq[String]): String = JArr(globs.map(JStr(_)).toVector).render
+    spark.read.format("terraform")
+      .option("table", graft.sources.TerraformTableProvider.RowsTable)
+      .option("configurationFilePaths", sources(paths.configurationFilePaths ++ paths.paths))
+      .option("planFilePaths", sources(paths.planFilePaths))
+      .option("stateFilePaths", sources(paths.stateFilePaths))
+      .load()
+      .as[TfRow]
   }
 
-  /** The partition rule of the Terraform scan, shared by [[rows]] and the
-    * DataSource V2 provider (graft.sources.TerraformTableProvider):
+  /** The partition rule of the Terraform scan
+    * (graft.sources.TerraformTableProvider.packPartitions):
     * `min(files, max(parallelism, ceil(bytes / maxPartitionBytes)))`.
     * A corpus of small files gets one partition per core; at corpus scale
     * each partition holds about `maxPartitionBytes` of files. Spark's own
@@ -155,8 +107,8 @@ object Terraform {
     * so a glob whose match is a directory contributes nothing rather
     * than being descended into). Overlapping globs in one source list
     * dedup by path (first occurrence wins), matching the old
-    * InMemoryFileIndex behavior. Shared by [[rows]] and the DataSource
-    * V2 provider (graft.sources.TerraformTableProvider). */
+    * InMemoryFileIndex behavior. Discovery of the DataSource V2 provider
+    * (graft.sources.TerraformTableProvider). */
   private[graft] def globOnce(conf: org.apache.hadoop.conf.Configuration,
       globs: Seq[String]): Seq[FileStatus] =
     globs.flatMap { g =>

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, Path, RawLocalFileSy
 /** Test-only object store: serves `s3a://bucket/<abs-path>` from the local
   * filesystem (the bucket authority is dropped; the key IS the local path).
   * Lets SourcesSpec drive the full `s3::` surface — Sources.parse →
-  * per-glob FileSystem resolution → binaryFile scan — without network or
+  * per-glob FileSystem resolution → terraform scan — without network or
   * an S3A jar. Installed via `fs.s3a.impl` in the test's Hadoop conf.
   *
   * I/O happens against translated `file:` paths (RawLocalFileSystem's

@@ -325,11 +325,15 @@ class SourcesSpec extends SparkSpecBase {
     val singlePass = MockS3FileSystem.totalCalls
     assert(singlePass > 0)
 
-    // building the rows plan (discovery + scan setup) pays exactly one
-    // glob pass: the matched statuses feed the scan directly
-    // (PreListedFileIndex) instead of being re-listed by load()
+    // planning the rows scan (discovery, the size estimate and the input
+    // partitions) pays exactly one glob pass: the scan lists once and
+    // both consumers read that listing
     MockS3FileSystem.resetCounters()
     val rows = Terraform.rows(spark, Terraform.Paths(configurationFilePaths = Seq(src)))
+    rows.queryExecution.executedPlan.foreach {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.inputPartitions
+      case _ =>
+    }
     val listingCalls = MockS3FileSystem.totalCalls
     assert(listingCalls <= singlePass,
       s"discovery re-listed: $listingCalls RPCs vs $singlePass for one glob pass")

@@ -1,10 +1,13 @@
 package graft.tf
 
 import graft.SparkSpecBase
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 
-/** Span elision (SURVEY §4): projections that prune every span column run
-  * the spanless parse; span consumers keep the full one, byte-identical. */
+/** Span elision (SURVEY §4): column pruning reaches the terraform reader,
+  * and a scan that reads no span-derived column parses without spans;
+  * span consumers keep the full parse, byte-identical. */
 class SpanElisionSpec extends SparkSpecBase {
 
   private val dir = new java.io.File("fixtures").getAbsolutePath
@@ -13,19 +16,27 @@ class SpanElisionSpec extends SparkSpecBase {
     planFilePaths = Seq(s"$dir/tfplan.json", s"$dir/tfplan_oneline.json"),
     stateFilePaths = Seq(s"$dir/terraform.tfstate"))
 
-  // uncached rows: the elision rule targets the live parse plan (a cached
-  // Dataset has already materialized every column)
+  // uncached rows: pruning reaches the live scan (a cached Dataset has
+  // already materialized every column)
   private def resource = Terraform.resource(Terraform.rows(spark, paths))
 
-  test("spanless projection swaps in the nospan parse") {
-    val pruned = resource.select("name", "type")
-    val p = pruned.queryExecution.optimizedPlan.toString
-    assert(p.contains(SpanElision.ParseNoSpanName), s"elision did not fire:\n$p")
+  private val spanFields = Set("startLine", "endLine", "source", "validation")
 
-    val spanful = resource.select("name", "type", "start_line", "source")
-    val q = spanful.queryExecution.optimizedPlan.toString
-    assert(!q.contains(SpanElision.ParseNoSpanName),
-      s"elision fired under a span consumer:\n$q")
+  /** Column names the plan's terraform scan reads. */
+  private def readColumns(df: DataFrame): Set[String] = {
+    val scans = df.queryExecution.optimizedPlan.collect {
+      case r: DataSourceV2ScanRelation => r.scan.readSchema().fieldNames.toSet
+    }
+    assert(scans.size == 1, s"want one terraform scan:\n${df.queryExecution.optimizedPlan}")
+    scans.head
+  }
+
+  test("spanless projection drops every span column from the scan's readSchema") {
+    val pruned = readColumns(resource.select("name", "type"))
+    assert(pruned.nonEmpty && (pruned & spanFields).isEmpty, s"scan reads $pruned")
+
+    val spanful = readColumns(resource.select("name", "type", "start_line", "source"))
+    assert(Set("startLine", "source").subsetOf(spanful), s"scan reads $spanful")
   }
 
   test("elided plan returns identical non-span values; spans stay real when selected") {
@@ -41,15 +52,13 @@ class SpanElisionSpec extends SparkSpecBase {
     // selects validation (but no explicit span column) must NOT elide
     val variable = Terraform.variable(Terraform.rows(spark, paths))
     val q = variable.select("name", "validation")
-    val p = q.queryExecution.optimizedPlan.toString
-    assert(!p.contains(SpanElision.ParseNoSpanName),
-      s"elision fired under a validation consumer:\n$p")
+    assert(readColumns(q).contains("validation"))
     assert(q.filter(col("validation").isNotNull).count() > 0,
       "fixture variable's validation block must survive")
   }
 
   test("whole-row consumers (typed Dataset ops) never see elided spans") {
-    // a typed map consumes the full TfRow struct — the rule must not fire
+    // a typed map consumes the full TfRow: the scan must read every column
     import spark.implicits._
     val ds = Terraform.rows(spark, paths)
     val spans = ds.map(r => r.startLine.getOrElse(-1L)).collect()
@@ -57,11 +66,18 @@ class SpanElisionSpec extends SparkSpecBase {
   }
 
   test("DSv2 reader elides spans under column pruning but keeps them when selected") {
-    def v2 = spark.read.format("terraform")
-      .option("table", "terraform_resource")
+    def v2(table: String) = spark.read.format("terraform")
+      .option("table", table)
       .option("configurationFilePaths", s"$dir/*.tf").load()
-    assert(v2.select("name").collect().nonEmpty)
-    assert(v2.select("name", "start_line")
+    assert(v2("terraform_resource").select("name").collect().nonEmpty)
+    assert(v2("terraform_resource").select("name", "start_line")
       .filter(col("start_line").isNotNull).count() > 0)
+    // validation comes from the block source: selecting it without any
+    // span column must still parse with spans
+    def withValidation(df: DataFrame) =
+      df.collect().count(r => !r.isNullAt(r.fieldIndex("validation")))
+    val all = withValidation(v2("terraform_variable"))
+    val pruned = withValidation(v2("terraform_variable").select("name", "validation"))
+    assert(all > 0 && pruned == all, s"validation: $pruned of $all under pruning")
   }
 }
