@@ -12,7 +12,11 @@ object Bench {
     }
     val spark = Engine.session(s"local[$cpus]")
     // Warmup pass: JIT + codegen + parquet footer caching dominate first
-    // execution on a fresh JVM; report steady-state numbers.
+    // execution on a fresh JVM; report steady-state numbers. The compiled
+    // generated classes stay warm into the timed passes only because
+    // Engine.session sizes Spark's codegen cache to the whole query
+    // surface (~2,700 classes); under the 100-entry default every query
+    // would recompile in every pass.
     selected.foreach { case (_, fn) =>
       try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
     }
@@ -82,7 +86,10 @@ object Bench {
       (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case _: java.io.IOException => () } // reporting must never fail the bench
     if (varianceJson.nonEmpty) println("{" + varianceJson.drop(1) + "}")
-    println(s"""{"metric":"total","value":${f"$total%.4f"},"unit":"sec","queries":${entries(v => f"$v%.4f")}$failedJson,"sf":"$sfDir"}""")
+    // Locale.ROOT: the f-interpolator honors the JVM default locale, and
+    // a comma-decimal locale would break the JSON line
+    def fmt4(x: Double) = String.format(java.util.Locale.ROOT, "%.4f", Double.box(x))
+    println(s"""{"metric":"total","value":${fmt4(total)},"unit":"sec","queries":${entries(fmt4)}$failedJson,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

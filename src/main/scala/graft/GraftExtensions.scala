@@ -75,4 +75,24 @@ object GraftExtensions {
     graft.functions.Cms.register(spark)
     graft.tf.Terraform.registerFunctions(spark)
   }
+
+  /** Register `f` as `name` unless the session already has a function of
+    * that name, and return the name. Query builders and
+    * `Terraform.refresh` register on every call, and replacing a
+    * registered function logs a warning each time. */
+  def registerOnce(spark: SparkSession, name: String)(
+      f: => org.apache.spark.sql.expressions.UserDefinedFunction): String = {
+    if (!spark.sessionState.functionRegistry.functionExists(FunctionIdentifier(name)))
+      spark.udf.register(name, f)
+    name
+  }
+
+  /** [[registerOnce]] for a native expression: `name` resolves through
+    * `builder`, and `cls` names the expression in DESCRIBE FUNCTION. */
+  def registerExpressionOnce(spark: SparkSession, name: String, cls: Class[_],
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(name)))
+      registry.registerFunction(FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+  }
 }

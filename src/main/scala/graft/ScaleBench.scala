@@ -31,7 +31,11 @@ import org.apache.spark.sql.functions._
   * (JIT + codegen + parquet footer caches dominate a fresh JVM's first
   * execution — a warmup against the measured dirs would instead
   * pre-build their memoized cluster labels and under-time them), then
-  * one measurement per (pipeline, scale), scales ascending.
+  * one measurement per (pipeline, scale), scales ascending. The
+  * warmup's compiled generated classes survive into the measurements
+  * only because `Engine.session` sizes Spark's codegen cache to the
+  * whole query surface; under the 100-entry default the sweep would
+  * evict and recompile them.
   * CONTAMINATION CAVEAT (measured, round 14): a pipeline that spills
   * tens of GB (dedup_rewrite at 256×) degrades the pipelines that run
   * after it in the same sweep — the shared JVM's heap and the page
@@ -196,6 +200,20 @@ object ScaleBench {
     // now derives all three tables (5.1M docs / 2M vectors / 102M
     // events).
     val deepScales = scales :+ 1024
+    // targeted re-measurements can cap the ladder (deriving the 1024×
+    // corpus costs more than a focused 64×/256× comparison needs);
+    // unset = the full published ladder. Checked before the session
+    // starts, so a bad value fails fast.
+    val allScales = sys.env.get("SPARK_GRAFT_SCALE_MAX").map { v =>
+      v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_SCALE_MAX must be an integer scale factor, got '$v'"))
+    } match {
+      case Some(mx) => deepScales.filter(_ <= mx)
+      case None => deepScales
+    }
+    require(allScales.nonEmpty,
+      s"SPARK_GRAFT_SCALE_MAX=${sys.env.getOrElse("SPARK_GRAFT_SCALE_MAX", "")} " +
+        s"leaves no scale to measure (the ladder is ${deepScales.mkString(", ")})")
     // the sweep measures octave-grown corpora — the situation where a
     // real deployment passes a wider initial shuffle partitioning per
     // submit (see the Engine knob's scaladoc); without it the two
@@ -206,14 +224,6 @@ object ScaleBench {
         !sys.props.contains("graft.initPartitions"))
       sys.props("graft.initPartitions") = "512"
     val spark = Engine.session()
-
-    // targeted re-measurements can cap the ladder (deriving the 1024×
-    // corpus costs more than a focused 64×/256× comparison needs);
-    // unset = the full published ladder
-    val allScales = sys.env.get("SPARK_GRAFT_SCALE_MAX").map(_.toInt) match {
-      case Some(mx) => deepScales.filter(_ <= mx)
-      case None => deepScales
-    }
     val dirs: Map[Int, String] = allScales.map { m =>
       val dir = if (m == 1) base else s"$workDir/x$m"
       if (m > 1 && !new java.io.File(s"$dir/documents.parquet").exists())
@@ -441,9 +451,10 @@ object ScaleBench {
     // untimed warmup against a DIFFERENT corpus dir (4th arg, default
     // sf0.01): exercises every code path (JIT, codegen caches,
     // ImageIO/parquet readers) without touching the measured dirs'
-    // cluster-label memos. MUST differ from base — warming the measured
-    // corpus itself would under-time the m=1 points and inflate every
-    // exponent.
+    // cluster-label memos. The compiled classes stay cached only
+    // because of Engine.CodegenCacheMaxEntries. MUST differ from base —
+    // warming the measured corpus itself would under-time the m=1
+    // points and inflate every exponent.
     {
       val warm = if (args.length > 3) args(3) else "/root/testdata/sf0.01"
       require(new java.io.File(warm).getCanonicalPath !=

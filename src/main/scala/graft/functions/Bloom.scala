@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 /** SQL bindings for Spark's Bloom-filter sketch expressions.
@@ -39,13 +38,8 @@ object Bloom {
   }
 
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(classOf[BloomFilterAggregate].getName, "bloom_agg"),
-      aggBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("bloom_contains"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName, "bloom_contains"),
-      containsBuilder)
+    graft.GraftExtensions.registerExpressionOnce(spark, "bloom_agg", classOf[BloomFilterAggregate], aggBuilder)
+    graft.GraftExtensions.registerExpressionOnce(
+      spark, "bloom_contains", classOf[BloomFilterMightContain], containsBuilder)
   }
 }

@@ -3,10 +3,9 @@ package graft.functions
 import java.io.ByteArrayInputStream
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 import org.apache.spark.util.sketch.CountMinSketch
@@ -99,8 +98,5 @@ object Cms {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("cms_estimate"),
-      new ExpressionInfo(classOf[CmsEstimate].getName, "cms_estimate"),
-      estimateBuilder)
+    graft.GraftExtensions.registerExpressionOnce(spark, "cms_estimate", classOf[CmsEstimate], estimateBuilder)
 }

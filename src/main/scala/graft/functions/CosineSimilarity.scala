@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -126,20 +125,13 @@ object CosineSimilarity {
       s"int_dot expects exactly 2 arguments (array<bigint> ×2), got ${other.length}")
   }
 
-  /** Register `cosine_sim(a, b)`, `float_dot(a, b)` and `int_dot(a, b)`. */
+  /** Register `cosine_sim(a, b)`, `float_dot(a, b)` and `int_dot(a, b)`,
+    * each only if the session lacks it: query builders call this on every
+    * build, and replacing a registered function logs a warning. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("float_dot"),
-      new ExpressionInfo(classOf[FloatDot].getName, "float_dot"),
-      dotBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("int_dot"),
-      new ExpressionInfo(classOf[IntDot].getName, "int_dot"),
-      intDotBuilder)
+    graft.GraftExtensions.registerExpressionOnce(spark, "cosine_sim", classOf[CosineSimilarity], builder)
+    graft.GraftExtensions.registerExpressionOnce(spark, "float_dot", classOf[FloatDot], dotBuilder)
+    graft.GraftExtensions.registerExpressionOnce(spark, "int_dot", classOf[IntDot], intDotBuilder)
   }
 }
 

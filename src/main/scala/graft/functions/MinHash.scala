@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
@@ -128,8 +127,5 @@ object MinHashSignature {
 
   /** Register `minhash_sig(arr, numPerms)`; numPerms must be a literal. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_sig"),
-      builder)
+    graft.GraftExtensions.registerExpressionOnce(spark, "minhash_sig", classOf[MinHashSignature], builder)
 }

@@ -59,10 +59,9 @@ object MinHashAgg {
     * function registry is global, so an unsized alias rebound by each
     * call would recreate exactly the cross-build race the sized name
     * exists to prevent (a query built for n permutations silently
-    * resolving another size's aggregate). */
-  def register(spark: SparkSession, numPerms: Int): String = {
-    val name = s"minhash_agg_$numPerms"
-    spark.udf.register(name, udaf(MinHashAgg(numPerms)))
-    name
-  }
+    * resolving another size's aggregate). The sized name also means an
+    * existing registration is this same aggregate, so it is kept. */
+  def register(spark: SparkSession, numPerms: Int): String =
+    graft.GraftExtensions.registerOnce(spark, s"minhash_agg_$numPerms")(
+      udaf(MinHashAgg(numPerms)))
 }

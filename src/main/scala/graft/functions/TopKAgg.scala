@@ -58,11 +58,8 @@ object TopKAgg {
   /** Register the k-specific `topk_agg_<k>(cos, id)` and return the
     * name — only the sized name exists, for the same cross-build-race
     * reason as [[MinHashAgg.register]]. */
-  def register(spark: SparkSession, k: Int): String = {
-    val name = s"topk_agg_$k"
-    spark.udf.register(name, udaf(TopKAgg(k)))
-    name
-  }
+  def register(spark: SparkSession, k: Int): String =
+    graft.GraftExtensions.registerOnce(spark, s"topk_agg_$k")(udaf(TopKAgg(k)))
 
   /** The shared final-re-rank shape: `scored` (key, id, score, …) →
     * (key, rank 1..k, id, score), row-identical to
@@ -123,11 +120,8 @@ final case class MinKAgg(k: Int)
 
 object MinKAgg {
   /** Register the k-specific `mink_agg_<k>(h, id)` and return the name. */
-  def register(spark: SparkSession, k: Int): String = {
-    val name = s"mink_agg_$k"
-    spark.udf.register(name, udaf(MinKAgg(k)))
-    name
-  }
+  def register(spark: SparkSession, k: Int): String =
+    graft.GraftExtensions.registerOnce(spark, s"mink_agg_$k")(udaf(MinKAgg(k)))
 
   /** (key, rank 1..k, id, ord) — row-identical to `row_number() OVER
     * (PARTITION BY key ORDER BY ord ASC, id ASC) <= k` via the partial

@@ -355,12 +355,7 @@ object Terraform {
     provider(r).createOrReplaceTempView("terraform_provider")
     variable(r).createOrReplaceTempView("terraform_variable")
     diagnostics(r).createOrReplaceTempView("terraform_diagnostics")
-    // once per session: re-registering on every refresh replaces seven
-    // functions and logs a warning for each
-    val registry = spark.sessionState.functionRegistry
-    if (!shims.forall { case (name, _) =>
-        registry.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)) })
-      registerFunctions(spark)
+    registerFunctions(spark)
     r
   }
 
@@ -476,8 +471,10 @@ object Terraform {
           java.lang.Boolean.valueOf(m.exists(_.toDouble != 0.0))
       }))
 
+  /** Register the shims the session lacks: once per session, since
+    * replacing them on every refresh would log a warning for each. */
   def registerFunctions(spark: SparkSession): Unit =
-    shims.foreach { case (name, f) => spark.udf.register(name, f) }
+    shims.foreach { case (name, f) => graft.GraftExtensions.registerOnce(spark, name)(f) }
 
   /** One `json_each` output row: sqlite's virtual-table schema minus the
     * always-NULL `parent`. Column values are strings (our JSON columns are

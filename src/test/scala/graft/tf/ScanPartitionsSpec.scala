@@ -53,7 +53,7 @@ class ScanPartitionsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     Terraform.register(spark, Terraform.Paths(configurationFilePaths = Seq(s"$fixtures/*.tf")))
   }
 
-  test("coalesced rows equal Builders.rowsForFile, per table and per path") {
+  test("scanned rows equal Builders.rowsForFile, per table and per path") {
     def byKey(rows: Seq[TfRow]): Map[(String, String), Seq[String]] =
       rows.groupBy(r => (r.table, r.path)).map { case (k, rs) => k -> rs.map(_.toString).sorted }
     val got = byKey(Terraform.rows(spark, paths).collect().toSeq)

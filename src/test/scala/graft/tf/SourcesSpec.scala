@@ -210,7 +210,7 @@ class SourcesSpec extends SparkSpecBase {
     } finally org.apache.hadoop.fs.FileUtil.fullyDelete(cachePath.toFile)
   }
 
-  test("e2e: s3:: source reaches the binaryFile scan (mocked object store)") {
+  test("e2e: s3:: source reaches the terraform scan (mocked object store)") {
     // reference S3 branch: utils.go:143 (tfStateList) — the full path:
     // s3:: URL → s3a:// glob → PER-GLOB FileSystem resolution (the session
     // default FS is file:///; resolving against it threw Wrong FS) → scan
