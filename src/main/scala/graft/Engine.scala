@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Session + testdata helpers shared by Verify / Bench / tests.
   *
@@ -157,7 +157,7 @@ object Engine {
     * [[release]] is a no-op there. A materialized relation returned to
     * consumers stays resident until those consumers finish — in
     * reliable mode, until session end unless the caller releases it. */
-  def materialize(df: DataFrame): DataFrame =
+  def materialize[T](df: Dataset[T]): Dataset[T] =
     if (reliablePersist) {
       val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       p.count()
@@ -168,7 +168,7 @@ object Engine {
     * consumer is done with it. Only meaningful in reliable-persist mode
     * (see [[materialize]]); the localCheckpoint default relies on the
     * ContextCleaner instead. */
-  def release(df: DataFrame): Unit =
+  def release(df: Dataset[_]): Unit =
     if (reliablePersist) { df.unpersist(blocking = false); () }
 
   private def reliablePersist: Boolean =

@@ -1272,16 +1272,24 @@ object Dedup {
     // (ExistingRDD), so Catalyst would always sort-merge here — a
     // needless sort-exchange when the converged star set is small (the
     // image/asset graphs, the gate corpora). The fixpoint fingerprint
-    // already counted the converged edges for free: under the row bound
-    // (~64 MB of 16-byte pair rows) broadcast them; a corpus-scale dup
-    // graph (billions of members) keeps the shuffle path.
+    // already counted the converged edges for free: when their 16-byte
+    // pair rows fit the session's broadcast threshold, broadcast them; a
+    // corpus-scale dup graph (billions of members) keeps the shuffle path.
     val stars = edges.withColumnRenamed("hi", "doc_id")
-    val starsHinted = if (fp._1 <= 4000000L) broadcast(stars) else stars
+    val starsHinted =
+      if (broadcastsEdges(fp._1, docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)) broadcast(stars)
+      else stars
     val lbl = docs.join(starsHinted, Seq("doc_id"), "left")
       .groupBy("doc_id").agg(min("lo").as("mn"))
       .select(col("doc_id"), coalesce(col("mn"), col("doc_id")).as("cluster"))
     (lbl.orderBy("doc_id"), rounds)
   }
+
+  /** Does a relation of `rows` 16-byte edge rows fit
+    * `spark.sql.autoBroadcastJoinThreshold` (`threshold` bytes; -1
+    * disables broadcasting)? */
+  private[queries] def broadcastsEdges(rows: Long, threshold: Long): Boolean =
+    threshold >= 0 && rows <= threshold / 16
 
   /** Large-star: every node u connects its LARGER neighbors to the
     * minimum of its neighborhood (incl. itself) — long chains halve.

@@ -1,9 +1,9 @@
 package graft.sources
 
-import graft.tf.{Builders, FileKind, Terraform, TfRow}
+import graft.tf.{Builders, FileKind, JArr, JNum, JStr, Json, Terraform, TfRow}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -178,6 +178,44 @@ object TerraformTableProvider {
     bins.map(_.result()).filter(_.nonEmpty).map(TfFilePartition(_): InputPartition)
   }
 
+  /** Internal option: the exact files to read, as a JSON array of
+    * `[path, kind, length]` triples. [[Terraform.register]] and
+    * [[Terraform.refresh]] list the sources themselves ([[listFiles]]) and
+    * hand the result over, so the scan reads those files without listing
+    * again; every other reader discovers from the source options. */
+  private[graft] val ListedFilesOption = "_listedFiles"
+
+  private[graft] def renderListed(files: Seq[(String, String, Long)]): String =
+    JArr(files.map { case (p, k, len) => JArr(Vector(JStr(p), JStr(k), JNum(len.toString))) }.toVector).render
+
+  private def parseListed(json: String): Seq[(String, String, Long)] =
+    Json.parse(json) match {
+      case JArr(items) => items.map {
+        case JArr(Vector(JStr(p), JStr(k), JNum(len))) => (p, k, len.toLong)
+        case other => throw new IllegalArgumentException(s"$ListedFilesOption: bad entry ${other.render}")
+      }
+      case other => throw new IllegalArgumentException(s"$ListedFilesOption: not an array: ${other.render}")
+    }
+
+  /** The pre-listed files of [[ListedFilesOption]], if the read has them. */
+  private[sources] def listedFiles(options: CaseInsensitiveStringMap): Option[Seq[(String, String, Long)]] =
+    Option(options.get(ListedFilesOption)).map(parseListed)
+
+  /** Every configured file as (path, kind, length, modification ms): each
+    * source list's resolved globs ([[Terraform.resolveGlobs]]) listed once
+    * ([[Terraform.globOnce]]), a `.tfstate` suffix forcing the state kind
+    * (utils.go:38-169). The discovery of an unfiltered scan. */
+  private[graft] def listFiles(conf: Configuration,
+      options: CaseInsensitiveStringMap): Seq[(String, String, Long, Long)] =
+    sourcesByKind(options).flatMap { case (kind, cfg) =>
+      Terraform.globOnce(conf, Terraform.resolveGlobs(cfg)).map(st => listed(st, kind))
+    }
+
+  private[sources] def listed(st: org.apache.hadoop.fs.FileStatus, kind: String): (String, String, Long, Long) = {
+    val p = st.getPath.toString
+    (p, if (p.endsWith(".tfstate")) FileKind.State else kind, st.getLen, st.getModificationTime)
+  }
+
   /** Configured sources per kind: positional `.load(path)` paths count as
     * configuration paths, like the reference's configuration_file_paths. */
   private[sources] def sourcesByKind(options: CaseInsensitiveStringMap): Seq[(String, Seq[String])] = {
@@ -284,38 +322,32 @@ private final class TerraformScan(table: String, options: CaseInsensitiveStringM
     * instead of a full LIST round over a 10⁷-file corpus. Globs whose
     * membership the matcher can't decide (`{}`/`[]` Hadoop-glob features)
     * still list and filter. */
-  private def discover(conf: Configuration): Seq[(String, String, Long, Long)] = {
-    // stat against the MATCHING GLOB's filesystem: the pushed path is the
-    // published (scheme-stripped for file:) spelling, so resolving it
-    // against the default FS would hit the wrong store on a cluster whose
-    // fs.defaultFS differs from the corpus's scheme
-    def statOne(glob: String, path: String): Seq[org.apache.hadoop.fs.FileStatus] =
-      try {
-        val fs = new Path(glob).getFileSystem(conf)
-        Seq(fs.getFileStatus(new Path(path))).filter(_.isFile)
-      } catch { case _: java.io.FileNotFoundException => Seq.empty }
-    TerraformTableProvider.sourcesByKind(options).flatMap { case (kind, cfg) =>
-      val globs = Terraform.resolveGlobs(cfg)
-      val matched = pathEq match {
-        case Some(want) =>
-          // a mismatch against a decidable, published-spelling glob proves
-          // non-membership (skip its LIST); anything else must still list
-          // — a relative or `{}`/`[]` glob's mismatch proves nothing
-          val (decidable, opaque) = globs.partition(g =>
-            Terraform.canDecideMembership(g) && Terraform.comparableSpelling(g))
-          val direct = decidable.find(g => Terraform.globMatches(g, want)).toSeq
-            .flatMap(g => statOne(g, want))
-          (direct ++ Terraform.globOnce(conf, opaque)
-            .filter(st => Terraform.stripScheme(st.getPath.toString) == want))
-            .distinctBy(_.getPath.toString)
-        case None => Terraform.globOnce(conf, globs)
-      }
-      matched.map { st =>
-        val p = st.getPath.toString
-        val k = if (p.endsWith(".tfstate")) FileKind.State else kind
-        (p, k, st.getLen, st.getModificationTime)
-      }
-    }.filter { case (p, _, _, _) => pathEq.forall(_ == Terraform.stripScheme(p)) }
+  private def discover(conf: Configuration): Seq[(String, String, Long, Long)] = pathEq match {
+    case None => TerraformTableProvider.listFiles(conf, options)
+    case Some(want) =>
+      // stat against the MATCHING GLOB's filesystem: the pushed path is the
+      // published (scheme-stripped for file:) spelling, so resolving it
+      // against the default FS would hit the wrong store on a cluster whose
+      // fs.defaultFS differs from the corpus's scheme
+      def statOne(glob: String, path: String): Seq[org.apache.hadoop.fs.FileStatus] =
+        try {
+          val fs = new Path(glob).getFileSystem(conf)
+          Seq(fs.getFileStatus(new Path(path))).filter(_.isFile)
+        } catch { case _: java.io.FileNotFoundException => Seq.empty }
+      TerraformTableProvider.sourcesByKind(options).flatMap { case (kind, cfg) =>
+        val globs = Terraform.resolveGlobs(cfg)
+        // a mismatch against a decidable, published-spelling glob proves
+        // non-membership (skip its LIST); anything else must still list
+        // — a relative or `{}`/`[]` glob's mismatch proves nothing
+        val (decidable, opaque) = globs.partition(g =>
+          Terraform.canDecideMembership(g) && Terraform.comparableSpelling(g))
+        val direct = decidable.find(g => Terraform.globMatches(g, want)).toSeq
+          .flatMap(g => statOne(g, want))
+        (direct ++ Terraform.globOnce(conf, opaque)
+          .filter(st => Terraform.stripScheme(st.getPath.toString) == want))
+          .distinctBy(_.getPath.toString)
+          .map(st => TerraformTableProvider.listed(st, kind))
+      }.filter { case (p, _, _, _) => Terraform.stripScheme(p) == want }
   }
 
   private def pack(spark: SparkSession,
@@ -336,11 +368,16 @@ private final class TerraformScan(table: String, options: CaseInsensitiveStringM
     new TerraformReaderFactory(table, required, bc, ignoreMissing)
   }
 
-  /** The batch scan's discovery, listed once: the size estimate and the
-    * input partitions both read it. */
+  /** The batch scan's files, listed once: the size estimate and the input
+    * partitions both read it. A read with [[TerraformTableProvider.ListedFilesOption]]
+    * takes those files (still pruned by a pushed `path =` qual) and lists
+    * nothing. */
   private lazy val discovered: Seq[(String, String, Long)] =
-    discover(SparkSession.active.sparkContext.hadoopConfiguration)
-      .map(f => (f._1, f._2, f._3))
+    TerraformTableProvider.listedFiles(options) match {
+      case Some(files) => files.filter(f => pathEq.forall(_ == Terraform.stripScheme(f._1)))
+      case None => discover(SparkSession.active.sparkContext.hadoopConfiguration)
+          .map(f => (f._1, f._2, f._3))
+    }
 
   /** The matched files' bytes, so the planner can still broadcast a small
     * Terraform table in a join. */
@@ -449,6 +486,18 @@ private final class TerraformReaderFactory(table: String, required: StructType,
         // span elision: when column pruning dropped every span-derived
         // column, skip span recovery / source slicing in the parse
         val needSpans = required.fieldNames.exists(TerraformTableProvider.spanColumns)
+        // the FileSystem of each scheme and authority, resolved once per
+        // partition, not once per file. Local files open through the raw
+        // local FS: the checksummed one stats a `.crc` sidecar per open,
+        // and Terraform files have none
+        val fileSystems = scala.collection.mutable.HashMap.empty[(String, String), FileSystem]
+        def open(hp: Path) = {
+          val uri = hp.toUri
+          fileSystems.getOrElseUpdate((uri.getScheme, uri.getAuthority), hp.getFileSystem(conf) match {
+            case local: LocalFileSystem => local.getRawFileSystem
+            case fs => fs
+          }).open(hp)
+        }
         // one packed bin of files, parsed lazily in sequence — one file's
         // content at a time, so per-task memory stays bounded
         fp.files.iterator.flatMap { case (path, kind) =>
@@ -457,8 +506,7 @@ private final class TerraformReaderFactory(table: String, required: StructType,
           // like Spark's file sources, surfacing the skip as a
           // terraform_diagnostics row instead of failing every task retry
           val parsed = try {
-            val hp = new Path(path)
-            val in = hp.getFileSystem(conf).open(hp)
+            val in = open(new Path(path))
             val content = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
             finally in.close()
             Builders.rowsForFile(Terraform.stripScheme(path), kind, content,

@@ -1,9 +1,17 @@
 package graft.tf
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.jdk.CollectionConverters._
 
 /** Spark-facing surface: file discovery → distributed parse → the seven
   * published Terraform tables as DataFrames / temp views.
@@ -17,11 +25,13 @@ import org.apache.spark.sql.functions._
   *   - the parse emits the superset TfRow — one pass serves all seven
   *     tables (the reference parses each file once per table,
   *     single-threaded);
-  *   - the parse runs, and its rows are cached, in [[scanPartitions]]
+  *   - the parse runs, and its rows are kept, in [[scanPartitions]]
   *     partitions — `min(files, max(defaultParallelism,
   *     ceil(bytes / maxPartitionBytes)))` — not in Spark's open-cost
   *     splits (see there for why);
-  *   - each table is filter + projection over the cached rows Dataset; on
+  *   - [[refresh]] re-parses only the files that changed since the last
+  *     listing and carries every other row over;
+  *   - each table is filter + projection over the registered rows; on
   *     an uncached read the connector takes the pruned columns (a scan
   *     that reads no span column skips span recovery) and a `path = '…'`
   *     qual, which drops non-matching files before any is opened (A2);
@@ -71,17 +81,29 @@ object Terraform {
     * its comma. A file that vanishes between listing and reading fails the
     * read, or, under `spark.sql.files.ignoreMissingFiles`, becomes a
     * `terraform_diagnostics` row. */
-  def rows(spark: SparkSession, paths0: Paths): Dataset[TfRow] = {
-    import spark.implicits._
-    val paths = paths0.orDefaults
-    def sources(globs: Seq[String]): String = JArr(globs.map(JStr(_)).toVector).render
+  def rows(spark: SparkSession, paths: Paths): Dataset[TfRow] =
+    read(spark, sourceOptions(paths))
+
+  /** A read of the connector's superset table under `options`. */
+  private def read(spark: SparkSession, options: Map[String, String]): Dataset[TfRow] =
     spark.read.format("terraform")
       .option("table", graft.sources.TerraformTableProvider.RowsTable)
-      .option("configurationFilePaths", sources(paths.configurationFilePaths ++ paths.paths))
-      .option("planFilePaths", sources(paths.planFilePaths))
-      .option("stateFilePaths", sources(paths.stateFilePaths))
+      .options(options)
       .load()
-      .as[TfRow]
+      .as[TfRow](rowEncoder)
+
+  /** Derived once: a product encoder is built by reflection on each
+    * request, and every refresh reads through one. */
+  private lazy val rowEncoder: Encoder[TfRow] = Encoders.product[TfRow]
+
+  /** The connector's source options for `paths`, each list a JSON array. */
+  private def sourceOptions(paths0: Paths): Map[String, String] = {
+    val paths = paths0.orDefaults
+    def sources(globs: Seq[String]): String = JArr(globs.map(JStr(_)).toVector).render
+    Map(
+      "configurationFilePaths" -> sources(paths.configurationFilePaths ++ paths.paths),
+      "planFilePaths" -> sources(paths.planFilePaths),
+      "stateFilePaths" -> sources(paths.stateFilePaths))
   }
 
   /** The partition rule of the Terraform scan
@@ -337,16 +359,97 @@ object Terraform {
     rows.filter(col("table") === "_error")
       .select(col("path"), col("description").as("error"))
 
-  /** Register all seven tables as temp views (+ the function shims).
-    * The parsed rows Dataset is cached — the analog of the reference SDK's
-    * query cache: every view and repeated query reuses one parse. */
-  def register(spark: SparkSession, paths: Paths): Dataset[TfRow] = {
-    val r = rows(spark, paths).cache()
+  /** One listed file: its listing path, kind, length and modification
+    * time in ms. */
+  private[tf] final case class Listed(path: String, kind: String, len: Long, mtimeMs: Long)
+
+  /** A listing of the configured sources, started at `startMs`, grouped by
+    * published (scheme-stripped) path, the `path` of the file's rows. A
+    * path has more than one entry when two source lists match it. */
+  private[tf] final case class Listing(startMs: Long, byPath: Map[String, Seq[Listed]]) {
+    lazy val files: Seq[Listed] = byPath.valuesIterator.flatten.toSeq
+
+    /** Git's racy-clean rule: a file modified within [[RacyWindowMs]] of
+      * this listing's start may change again inside the same mtime tick,
+      * keeping its length and mtime, so its entry cannot vouch that the
+      * parsed content is current. */
+    def racy(path: String): Boolean = byPath(path).exists(_.mtimeMs > startMs - RacyWindowMs)
+  }
+
+  /** The coarsest common mtime granularity (FAT's 2 s; ext4 and most object
+    * stores are far finer). */
+  private val RacyWindowMs = 2000L
+
+  /** List the configured sources once, on the driver: the steps of the
+    * scan's own discovery (`sourcesByKind`, [[resolveGlobs]], [[globOnce]]). */
+  private def list(spark: SparkSession, paths: Paths): Listing = {
+    val startMs = System.currentTimeMillis()
+    val files = graft.sources.TerraformTableProvider.listFiles(spark.sparkContext.hadoopConfiguration,
+      new CaseInsensitiveStringMap(sourceOptions(paths).asJava))
+    Listing(startMs, files.map { case (p, k, len, ms) => Listed(p, k, len, ms) }.groupBy(f => stripScheme(f.path)))
+  }
+
+  /** Parse exactly `files` through the connector: no listing. */
+  private def parse(spark: SparkSession, files: Seq[Listed]): Dataset[TfRow] =
+    read(spark, Map(graft.sources.TerraformTableProvider.ListedFilesOption ->
+      graft.sources.TerraformTableProvider.renderListed(files.map(f => (f.path, f.kind, f.len)))))
+
+  /** The blocks behind registered rows. The rows are kept through
+    * graft.Engine.materialize: by default a lineage-free relation
+    * (`localCheckpoint`) whose blocks hold the rows, so no later plan over
+    * it reaches the files or an earlier generation, and the ContextCleaner
+    * drops the blocks once nothing references them. The blocks live
+    * unreplicated on the executors, the single-process trade
+    * `Engine.materialize` documents: a lost executor loses them for good,
+    * and [[refresh]] or [[ensureRegistered]] then re-parse from scratch
+    * (see [[intact]]). Under `SPARK_GRAFT_RELIABLE_PERSIST=1` the rows are
+    * persisted with lineage to the files instead, and there are no such
+    * blocks: lost ones are recomputed. */
+  private[tf] def blocks(rows: Dataset[TfRow]): Option[RDD[InternalRow]] =
+    rows.queryExecution.logical.collectFirst { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
+
+  /** Can `rows` still be read? A lineage-free relation cannot recompute a
+    * lost block, so every block must still be present (asked of the
+    * driver's block manager master, no job); a relation persisted with
+    * lineage always can. */
+  private def intact(rows: Dataset[TfRow]): Boolean =
+    blocks(rows).forall(org.apache.spark.GraftBlocks.allPresent)
+
+  /** Register all seven tables as temp views (+ the function shims) over
+    * one parse of the configured corpus — the analog of the reference
+    * SDK's query cache: every view and repeated query reuses the parse.
+    *
+    * The sources are listed once, here, on the driver; the listing is kept
+    * for [[refresh]] and the scan reads exactly the listed files. The rows
+    * are parsed eagerly into one relation of [[scanPartitions]] partitions
+    * (see [[blocks]]). A re-registration replaces the session's
+    * registration; a DataFrame built on the rows it replaced keeps reading
+    * them. Published `<name>_v` views ([[registerVariantViews]]) are
+    * re-published over the new rows. */
+  def register(spark: SparkSession, paths: Paths): Dataset[TfRow] = ensureLock.synchronized {
+    val prev = Option(registrations.get(spark))
+    val r = parseAll(spark, paths, list(spark, paths))
+    // reliable persist only: the CacheManager holds a persisted relation
+    // until it is unpersisted, and a DataFrame built on it re-reads the files
+    prev.foreach(p => graft.Engine.release(p.rows))
+    r
+  }
+
+  /** Parse every listed file and make the result the session's registration. */
+  private def parseAll(spark: SparkSession, paths: Paths, listing: Listing): Dataset[TfRow] =
+    publish(spark, Registration(paths, listing, graft.Engine.materialize(parse(spark, listing.files))))
+
+  /** A session's registered configuration, its listing and its rows. */
+  private final case class Registration(paths: Paths, listing: Listing, rows: Dataset[TfRow])
+
+  private val registrations = new java.util.concurrent.ConcurrentHashMap[SparkSession, Registration]()
+
+  /** Make `reg` the session's registration and point the views at its rows. */
+  private def publish(spark: SparkSession, reg: Registration): Dataset[TfRow] = {
     registrations.keySet.removeIf(s => s.sparkContext.isStopped) // drop dead sessions
-    // a re-registration replaces the cached parse: unpersist the old one
-    // or its blocks leak in the block manager for the context's lifetime
-    Option(registrations.put(spark, (paths, r)))
-      .filter(_._2 ne r).foreach(_._2.unpersist())
+    val hadVariantViews = spark.sessionState.catalog.getTempView("terraform_resource_v").isDefined
+    registrations.put(spark, reg)
+    val r = reg.rows
     resource(r).createOrReplaceTempView("terraform_resource")
     dataSource(r).createOrReplaceTempView("terraform_data_source")
     local(r).createOrReplaceTempView("terraform_local")
@@ -355,41 +458,111 @@ object Terraform {
     provider(r).createOrReplaceTempView("terraform_provider")
     variable(r).createOrReplaceTempView("terraform_variable")
     diagnostics(r).createOrReplaceTempView("terraform_diagnostics")
+    // a `_v` view holds the analyzed plan of the rows it was built over
+    if (hadVariantViews) registerVariantViews(spark)
     registerFunctions(spark)
     r
   }
 
-  private val registrations =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, (Paths, Dataset[TfRow])]()
-
   /** Idempotent [[register]]: no-op when `paths` is already this session's
-    * registered configuration (keeping its cached parse); registers — or
-    * RE-registers, replacing a different configuration — otherwise. The
-    * once-per-session guard callers used to hand-roll around register's
-    * parse cost lives here, next to the map that answers it. */
+    * registered configuration and its rows can still be read (keeping its
+    * parse); registers — or RE-registers, replacing a different
+    * configuration or lost rows — otherwise. The once-per-session guard
+    * callers used to hand-roll around register's parse cost lives here,
+    * next to the map that answers it. */
   private val ensureLock = new Object
 
   def ensureRegistered(spark: SparkSession, paths: Paths): Dataset[TfRow] =
     // serialized check-then-register: two concurrent callers with the same
-    // paths must not both parse (the second register would also unpersist
-    // the first caller's just-returned cache)
+    // paths must not both parse
     ensureLock.synchronized {
       val prev = registrations.get(spark)
-      if (prev == null || prev._1 != paths) register(spark, paths) else prev._2
+      if (prev == null || prev.paths != paths || !intact(prev.rows)) register(spark, paths) else prev.rows
     }
 
   /** Watch-path refresh for the batch views — the analog of the reference's
     * file-watch cache invalidation (`steampipe:"watch"` connection tags,
     * connection_config.go:8-11: the SDK drops its query cache when a watched
-    * file changes and the next query re-parses). Drops the cached rows for
-    * this session's registered paths and re-registers all seven views, so
-    * edits/creates/deletes under the configured globs become visible.
-    * (The continuous analog is [[streamRows]].) */
-  def refresh(spark: SparkSession): Dataset[TfRow] = {
+    * file changes and the next query re-parses). Edits, creates and deletes
+    * under the configured globs become visible through the same view names,
+    * and only the changed files are parsed again.
+    *
+    * The sources are listed again and diffed against the registration's
+    * listing, per published path, on (path, kind, length, mtime):
+    *   - nothing changed: the current rows come back as they are (the same
+    *     Dataset); nothing is re-registered and no Spark job runs;
+    *   - otherwise the changed and deleted paths are stale, and the new
+    *     rows are the previous rows minus the stale paths plus a parse of
+    *     the changed and added files, in [[scanPartitions]] of the new
+    *     listing (see `carryOver`), materialized, lineage-free, before the
+    *     views move.
+    *
+    * A file whose mtime fell within 2 s of the previous listing's start is
+    * re-parsed even when its length and mtime still match (git's
+    * racy-clean rule): it may have been rewritten inside the same mtime
+    * tick. On a corpus edited between quick refreshes this re-parses the
+    * recent edits once or twice more.
+    *
+    * Every listed file is parsed again instead, changed or not, in two
+    * cases. When the previous rows' blocks are gone (an executor lost on a
+    * cluster, see [[blocks]]); blocks lost while a carry-over runs fail
+    * that refresh, and the next one re-parses. And under
+    * `SPARK_GRAFT_RELIABLE_PERSIST=1`, where each generation keeps its
+    * lineage to the files rather than to the generation before it.
+    *
+    * Superseded rows are left to the ContextCleaner (under reliable persist
+    * they are unpersisted): a DataFrame built before the refresh keeps
+    * reading its snapshot. (The continuous analog is [[streamRows]].) */
+  def refresh(spark: SparkSession): Dataset[TfRow] = ensureLock.synchronized {
     val prev = registrations.get(spark)
     require(prev != null, "Terraform.refresh: no prior Terraform.register for this session")
-    prev._2.unpersist(blocking = true)
-    register(spark, prev._1)
+    val before = prev.listing.byPath
+    val now = list(spark, prev.paths)
+    val stale = before.keySet.filter(p => now.byPath.get(p).forall(_ != before(p)) || prev.listing.racy(p))
+    val parsed = now.byPath.keySet.filter(p => stale(p) || !before.contains(p))
+    val lost = !intact(prev.rows)
+    blocks(prev.rows) match {
+      case _ if !lost && stale.isEmpty && parsed.isEmpty => prev.rows
+      case Some(rdd) if !lost =>
+        publish(spark, Registration(prev.paths, now,
+          carryOver(spark, prev.rows, rdd, stale, parsed.toSeq.flatMap(now.byPath), now)))
+      case _ => // lost, or persisted with lineage, which a carry-over would chain
+        val r = parseAll(spark, prev.paths, now)
+        graft.Engine.release(prev.rows)
+        r
+    }
+  }
+
+  /** The rows of `now`: the previous rows, whose blocks are `stored`,
+    * minus the `stale` paths, plus a parse of the `fresh` files, in
+    * [[scanPartitions]] partitions of `now`, materialized. Each carried
+    * partition keeps its rows where they are and takes the fresh rows of
+    * one path-hash bucket, so only the fresh rows move and each partition
+    * takes an even share of them; a new partition count redistributes
+    * every row by path hash. The stale filter is a closure,
+    * not a plan: every refresh runs the same classes. */
+  private def carryOver(spark: SparkSession, prev: Dataset[TfRow], stored: RDD[InternalRow],
+                        stale: Set[String], fresh: Seq[Listed], now: Listing): Dataset[TfRow] = {
+    val schema = prev.schema
+    val at = schema.fieldIndex("path")
+    val gone = stale.map(UTF8String.fromString)
+    val carried = stored.mapPartitions(_.filterNot(r => gone(r.getUTF8String(at))), preservesPartitioning = true)
+    val parsed: RDD[InternalRow] =
+      if (fresh.isEmpty) spark.sparkContext.emptyRDD[InternalRow]
+      else parse(spark, fresh).queryExecution.toRdd.mapPartitions { it =>
+        val unsafe = UnsafeProjection.create(schema)
+        it.map(unsafe(_).copy(): InternalRow)
+      }
+    val n = scanPartitions(now.files.size, now.files.iterator.map(_.len).sum,
+      spark.sessionState.conf.filesMaxPartitionBytes, spark.sparkContext.defaultParallelism)
+    def byPath(rows: RDD[InternalRow]) =
+      rows.keyBy(_.getUTF8String(at).hashCode).partitionBy(new HashPartitioner(n)).values
+    val next =
+      if (carried.getNumPartitions == n) carried.zipPartitions(byPath(parsed))(_ ++ _)
+      else byPath(carried ++ parsed)
+    // sized like a parse of the listing, so joins over the views still broadcast
+    graft.Engine.materialize(org.apache.spark.sql.GraftRows.of(spark, next, schema, now.files.iterator.map(_.len).sum)
+      .as[TfRow](rowEncoder))
   }
 
   /** Postgres array-index semantics for `->`/`->>`: a negative integer

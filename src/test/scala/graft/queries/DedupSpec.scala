@@ -23,6 +23,13 @@ class DedupSpec extends SparkSpecBase {
     }
   }
 
+  test("the star-label broadcast gate follows autoBroadcastJoinThreshold at 16 B per edge") {
+    val tenMb = 10L * 1024 * 1024
+    assert(Dedup.broadcastsEdges(tenMb / 16, tenMb))
+    assert(!Dedup.broadcastsEdges(tenMb / 16 + 1, tenMb))
+    assert(!Dedup.broadcastsEdges(0L, -1L), "a disabled threshold never broadcasts")
+  }
+
   test("minhash LSH finds the planted near-duplicate pairs") {
     val got = pairs("x_dedup_minhash")
     assert(got.contains((8L, 12L)), s"missing (8,12) in $got")

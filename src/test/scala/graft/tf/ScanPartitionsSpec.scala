@@ -9,8 +9,10 @@ import java.nio.file.{Files, Path => JPath}
 
 /** [[Terraform.rows]] is one terraform-reader scan: a corpus of tiny files
   * is parsed and cached in [[Terraform.scanPartitions]] partitions, one per
-  * core, not in one open-cost split per few files; the scan takes a pushed
-  * `path =` qual, reports its size to the planner and reads brace globs. */
+  * core, not in one open-cost split per few files; [[Terraform.refresh]]
+  * re-parses only the changed files and keeps that partitioning; the scan
+  * takes a pushed `path =` qual, reports its size to the planner and reads
+  * brace globs. */
 class ScanPartitionsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
 
   private val fixtures = new java.io.File("fixtures").getAbsolutePath
@@ -53,9 +55,18 @@ class ScanPartitionsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     Terraform.register(spark, Terraform.Paths(configurationFilePaths = Seq(s"$fixtures/*.tf")))
   }
 
+  /** Rows as multisets per (table, path). */
+  private def byKey(rows: Seq[TfRow]): Map[(String, String), Seq[String]] =
+    rows.groupBy(r => (r.table, r.path)).map { case (k, rs) => k -> rs.map(_.toString).sorted }
+
+  private def assertSameRows(got: Seq[TfRow], want: Seq[TfRow], clue: String): Unit = {
+    val (g, w) = (byKey(got), byKey(want))
+    assert(g.keySet == w.keySet,
+      s"$clue: (table, path) keys differ: ${(g.keySet diff w.keySet) ++ (w.keySet diff g.keySet)}")
+    w.foreach { case (k, rs) => assert(g(k) == rs, s"$clue: rows differ for $k") }
+  }
+
   test("scanned rows equal Builders.rowsForFile, per table and per path") {
-    def byKey(rows: Seq[TfRow]): Map[(String, String), Seq[String]] =
-      rows.groupBy(r => (r.table, r.path)).map { case (k, rs) => k -> rs.map(_.toString).sorted }
     val got = byKey(Terraform.rows(spark, paths).collect().toSeq)
     val want = byKey(files.flatMap { case (p, kind) =>
       Builders.rowsForFile(p, kind, Files.readString(JPath.of(p)))
@@ -63,6 +74,194 @@ class ScanPartitionsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     assert(got.keySet == want.keySet,
       s"(table, path) keys differ: ${(got.keySet diff want.keySet) ++ (want.keySet diff got.keySet)}")
     want.foreach { case (k, rs) => assert(got(k) == rs, s"rows differ for $k") }
+  }
+
+  // ---- incremental refresh: Terraform.refresh re-parses only what changed
+
+  /** A corpus of `n` one-bucket config files, none of them racy, and the
+    * three sources that read it: `*.tf` configs, `*.tfstate` states,
+    * `*.tfplan.json` plans. */
+  private def corpus(name: String, n: Int): (JPath, Terraform.Paths) = {
+    val d = Files.createTempDirectory(name)
+    (0 until n).foreach(i => Files.writeString(d.resolve(f"f$i%03d.tf"), bucket(s"b$i")))
+    age(d)
+    (d, Terraform.Paths(configurationFilePaths = Seq(s"$d/*.tf"),
+      planFilePaths = Seq(s"$d/*.tfplan.json"), stateFilePaths = Seq(s"$d/*.tfstate")))
+  }
+
+  private def bucket(name: String): String = s"""resource "aws_s3_bucket" "$name" { bucket = "$name" }\n"""
+
+  /** Move every file's mtime well before any listing: no file is racy. */
+  private def age(d: JPath): Unit =
+    Files.list(d).forEach(f => Files.setLastModifiedTime(f,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 60000)))
+
+  private def leaveOnFixtures(): Unit =
+    Terraform.register(spark, Terraform.Paths(configurationFilePaths = Seq(s"$fixtures/*.tf")))
+
+  test("refresh after seeded edit batches equals a cold register, per table and per path") {
+    val (d, p) = corpus("refresh-batches", 40)
+    Files.copy(JPath.of(s"$fixtures/tfplan.json"), d.resolve("a.tfplan.json"))
+    Files.copy(JPath.of(s"$fixtures/terraform.tfstate"), d.resolve("s0.tfstate"))
+    age(d)
+    val state = Files.readString(JPath.of(s"$fixtures/terraform.tfstate"))
+    Terraform.register(spark, p)
+    def check(clue: String): Unit = {
+      val (got, want) = (Terraform.refresh(spark), Terraform.rows(spark, p))
+      assertSameRows(got.collect().toSeq, want.collect().toSeq, clue)
+      // sized like a parse of the corpus, so small joins over the views broadcast
+      assert(got.queryExecution.optimizedPlan.stats.sizeInBytes == want.queryExecution.optimizedPlan.stats.sizeInBytes,
+        s"$clue: size estimate")
+    }
+
+    val rnd = new scala.util.Random(11)
+    var next = 100
+    def live = Files.list(d).toArray.map(_.asInstanceOf[JPath])
+      .filter(_.getFileName.toString.matches("f\\d+\\.tf")).sortBy(_.toString)
+    (1 to 6).foreach { b =>
+      // rewrite (a different length), delete and add a few configs
+      rnd.shuffle(live.toSeq).take(3).foreach(f => Files.writeString(f, bucket(s"r${b}_$next") + bucket(s"x$next")))
+      rnd.shuffle(live.toSeq).take(1).foreach(Files.delete)
+      (0 until 2).foreach { _ => Files.writeString(d.resolve(f"f$next%03d.tf"), bucket(s"b$next")); next += 1 }
+      check(s"batch $b")
+    }
+    // a file turns malformed (a diagnostics row), then back
+    val m = live.head
+    val good = Files.readString(m)
+    Files.writeString(m, "resource \"aws_s3_bucket\" \"broken\" {\n")
+    check("malformed")
+    Files.writeString(m, good)
+    check("repaired")
+    // state content under a config name, then renamed to .tfstate: the
+    // config parse fails, the state parse succeeds
+    Files.writeString(d.resolve("moved.tf"), state)
+    check("state content as .tf")
+    Files.move(d.resolve("moved.tf"), d.resolve("moved.tfstate"))
+    check(".tf renamed to .tfstate")
+    // a same-length rewrite inside one mtime tick: length and mtime match
+    // the previous listing, only the racy-clean rule catches it
+    val t = d.resolve("tick.tf")
+    Files.writeString(t, bucket("tick1"))
+    check("tick written")
+    val mtime = Files.getLastModifiedTime(t)
+    Files.writeString(t, bucket("tock1"))
+    Files.setLastModifiedTime(t, mtime)
+    check("same-length rewrite in one mtime tick")
+    leaveOnFixtures()
+  }
+
+  test("refresh with no change starts no Spark job and returns the same rows") {
+    val (_, p) = corpus("refresh-nochange", 20)
+    val r = Terraform.register(spark, p)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("refresh-nochange", "refresh")
+      val again = try Terraform.refresh(spark) finally sc.clearJobGroup()
+      assert(again eq r, "an unchanged corpus must keep the registered rows")
+      // listener events arrive in order: once a later marker job's start
+      // is seen, every job the refresh started has been seen too
+      sc.setJobGroup("marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("marker"))
+      assert(!groups.contains("refresh-nochange"), s"refresh ran jobs: $groups")
+    } finally sc.removeSparkListener(listener)
+    leaveOnFixtures()
+  }
+
+  test("20 refreshes keep one materialized relation in balanced scanPartitions partitions") {
+    val (d, p) = corpus("refresh-twenty", 400)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // a small split size, so the growing corpus needs more partitions as
+    // it grows (5 of ~4 KB at the start, 7 after 20 refreshes)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    try {
+      Terraform.register(spark, p)
+      val rnd = new scala.util.Random(5)
+      var next = 1000
+      def persisted(): Int = {
+        // superseded generations go once unreachable: collect, and wait for
+        // the collected relations to leave the persistent-RDD map
+        var k = Int.MaxValue
+        var tries = 0
+        while (k > 1 && tries < 50) {
+          System.gc(); Thread.sleep(100)
+          k = sc.getPersistentRDDs.keySet.count(id => !before(id))
+          tries += 1
+        }
+        k
+      }
+      val counts = (1 to 20).map { i =>
+        val files = Files.list(d).toArray.map(_.asInstanceOf[JPath]).toSeq.sortBy(_.toString)
+        val picked = rnd.shuffle(files).take(8)
+        picked.take(6).foreach(f => Files.writeString(f, bucket(s"e$next") + bucket(s"g$next")))
+        picked.drop(6).foreach(Files.delete)
+        (0 until 4).foreach { _ => Files.writeString(d.resolve(s"n$next.tf"), bucket(s"n$next")); next += 1 }
+        val r = Terraform.refresh(spark)
+        val live = Files.list(d).toArray.map(_.asInstanceOf[JPath])
+        val n = Terraform.scanPartitions(live.length, live.map(Files.size(_)).sum,
+          spark.sessionState.conf.filesMaxPartitionBytes, sc.defaultParallelism)
+        val sizes = r.queryExecution.toRdd.mapPartitions(it => Iterator(it.size)).collect()
+        assert(sizes.length == n, s"refresh $i: ${sizes.length} partitions, want $n")
+        // balanced by path each time: a coalesce of carried and delta
+        // partitions keeps each row where it was, so a partition added as
+        // the corpus grows holds only a delta
+        val mean = sizes.sum.toDouble / sizes.length
+        assert(sizes.max <= 2 * mean && sizes.min >= mean / 2, s"refresh $i: rows per partition ${sizes.toSeq}")
+        if (i == 10 || i == 20) assert(persisted() == 1, s"refresh $i: superseded relations stay persisted")
+        n
+      }
+      assert(counts.last > counts.head, s"the corpus never outgrew its partitions: $counts")
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    leaveOnFixtures()
+  }
+
+  test("refresh after a register never queried, and after lost blocks, is correct") {
+    val (d, p) = corpus("refresh-unqueried", 12)
+    Terraform.register(spark, p)
+    Files.delete(d.resolve("f003.tf"))
+    assertSameRows(Terraform.refresh(spark).collect().toSeq, Terraform.rows(spark, p).collect().toSeq,
+      "delete after an unqueried register")
+    // blocks lost (an executor gone, on a cluster): a full re-parse
+    def lose(r: org.apache.spark.sql.Dataset[TfRow]) = Terraform.blocks(r).foreach(_.unpersist(blocking = true))
+    lose(Terraform.refresh(spark))
+    Files.delete(d.resolve("f004.tf"))
+    Files.writeString(d.resolve("f100.tf"), bucket("late"))
+    assertSameRows(Terraform.refresh(spark).collect().toSeq, Terraform.rows(spark, p).collect().toSeq,
+      "refresh over lost blocks")
+    assert(spark.table("terraform_resource").filter(col("name") === "late").count() == 1)
+    // ... with no file changed, and through ensureRegistered
+    age(d)
+    val settled = Terraform.refresh(spark)
+    assert(Terraform.refresh(spark) eq settled, "no file changed")
+    lose(settled)
+    assertSameRows(Terraform.refresh(spark).collect().toSeq, Terraform.rows(spark, p).collect().toSeq,
+      "unchanged refresh over lost blocks")
+    lose(Terraform.ensureRegistered(spark, p))
+    assertSameRows(Terraform.ensureRegistered(spark, p).collect().toSeq, Terraform.rows(spark, p).collect().toSeq,
+      "ensureRegistered over lost blocks")
+    assert(spark.table("terraform_resource").filter(col("name") === "late").count() == 1)
+    leaveOnFixtures()
+  }
+
+  test("a refresh reaches the variant views") {
+    val (d, p) = corpus("refresh-variant", 6)
+    Terraform.register(spark, p)
+    Terraform.registerVariantViews(spark)
+    Files.writeString(d.resolve("f001.tf"), bucket("renamed"))
+    Terraform.refresh(spark)
+    val names = spark.sql("select variant_get(arguments, '$.bucket', 'string') from terraform_resource_v")
+      .collect().map(_.getString(0)).toSet
+    assert(names == Set("b0", "renamed", "b2", "b3", "b4", "b5"), names.toString)
+    leaveOnFixtures()
   }
 
   test("a path predicate reaches the terraform scan, which plans one file") {
