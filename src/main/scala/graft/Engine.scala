@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Session + testdata helpers shared by Verify / Bench / tests.
@@ -170,6 +171,24 @@ object Engine {
     * ContextCleaner instead. */
   def release(df: Dataset[_]): Unit =
     if (reliablePersist) { df.unpersist(blocking = false); () }
+
+  /** [[materialize]] for an RDD, under the same policy: locally
+    * checkpointed by default, persisted with its lineage under
+    * `SPARK_GRAFT_RELIABLE_PERSIST=1`; either way computed once, here.
+    * The job is run directly, not through `count()`, whose closures
+    * Spark's ClosureCleaner finds in RDD and SparkContext, classes of
+    * ~200 KB it reads on every call. */
+  def materialize[T](rdd: RDD[T]): RDD[T] = {
+    if (reliablePersist) rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    else rdd.localCheckpoint()
+    rdd.sparkContext.runJob(rdd, (_: org.apache.spark.TaskContext, it: Iterator[T]) => it.foreach(_ => ()),
+      rdd.partitions.indices)
+    rdd
+  }
+
+  /** [[release]] for an RDD obtained from [[materialize]]. */
+  def release(rdd: RDD[_]): Unit =
+    if (reliablePersist) { rdd.unpersist(blocking = false); () }
 
   private def reliablePersist: Boolean =
     sys.env.get("SPARK_GRAFT_RELIABLE_PERSIST").contains("1")

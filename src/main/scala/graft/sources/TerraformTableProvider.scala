@@ -36,7 +36,7 @@ import scala.jdk.CollectionConverters._
   * reference's single pushed-down qual — `path = '…'` — pruning the file
   * list AT PLANNING TIME (`utils.go:45-58`), so non-matching files are
   * never opened. Column pruning drops unused fields before rows are built.
-  * Discovery shares [[Terraform.globOnce]]'s single listing pass, runs once
+  * Discovery shares [[Terraform.globLists]]' single listing pass, runs once
   * per scan, and reports the matched bytes as the planner's size estimate.
   *
   * Paths given positionally to `.load(p…)` are configuration paths; the
@@ -201,15 +201,17 @@ object TerraformTableProvider {
   private[sources] def listedFiles(options: CaseInsensitiveStringMap): Option[Seq[(String, String, Long)]] =
     Option(options.get(ListedFilesOption)).map(parseListed)
 
-  /** Every configured file as (path, kind, length, modification ms): each
-    * source list's resolved globs ([[Terraform.resolveGlobs]]) listed once
-    * ([[Terraform.globOnce]]), a `.tfstate` suffix forcing the state kind
-    * (utils.go:38-169). The discovery of an unfiltered scan. */
+  /** Every configured file as (path, kind, length, modification ms): the
+    * resolved globs ([[Terraform.resolveGlobs]]) of every source list
+    * listed in one pass ([[Terraform.globLists]]: a directory several
+    * lists glob is listed once), a `.tfstate` suffix forcing the state
+    * kind (utils.go:38-169). The discovery of an unfiltered scan. */
   private[graft] def listFiles(conf: Configuration,
-      options: CaseInsensitiveStringMap): Seq[(String, String, Long, Long)] =
-    sourcesByKind(options).flatMap { case (kind, cfg) =>
-      Terraform.globOnce(conf, Terraform.resolveGlobs(cfg)).map(st => listed(st, kind))
-    }
+      options: CaseInsensitiveStringMap): Seq[(String, String, Long, Long)] = {
+    val kinds = sourcesByKind(options)
+    kinds.zip(Terraform.globLists(conf, kinds.map(k => Terraform.resolveGlobs(k._2))))
+      .flatMap { case ((kind, _), files) => files.map(st => listed(st, kind)) }
+  }
 
   private[sources] def listed(st: org.apache.hadoop.fs.FileStatus, kind: String): (String, String, Long, Long) = {
     val p = st.getPath.toString
@@ -313,7 +315,7 @@ private final class TerraformScan(table: String, options: CaseInsensitiveStringM
   override def description(): String =
     s"terraform table=$table pushedPath=${pathEq.getOrElse("-")}"
 
-  /** One discovery pass: glob (Terraform.globOnce), prune by the pushed
+  /** One discovery pass: glob (Terraform.globLists), prune by the pushed
     * `path =` qual BEFORE any file is opened, return (path, kind, len,
     * modMs). Shared by the batch scan and the micro-batch stream.
     *

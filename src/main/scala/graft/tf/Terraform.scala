@@ -1,10 +1,10 @@
 package graft.tf
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
@@ -82,18 +82,20 @@ object Terraform {
     * read, or, under `spark.sql.files.ignoreMissingFiles`, becomes a
     * `terraform_diagnostics` row. */
   def rows(spark: SparkSession, paths: Paths): Dataset[TfRow] =
-    read(spark, sourceOptions(paths))
+    read(spark, sourceOptions(paths)).as[TfRow](rowEncoder)
 
-  /** A read of the connector's superset table under `options`. */
-  private def read(spark: SparkSession, options: Map[String, String]): Dataset[TfRow] =
+  /** A read of the connector's superset table under `options`, untyped:
+    * a typed Dataset binds its encoder to the plan each time one is built
+    * on it, so the rows stay untyped inside this object and take the
+    * `TfRow` type once, where they are returned. */
+  private def read(spark: SparkSession, options: Map[String, String]): DataFrame =
     spark.read.format("terraform")
       .option("table", graft.sources.TerraformTableProvider.RowsTable)
       .options(options)
       .load()
-      .as[TfRow](rowEncoder)
 
   /** Derived once: a product encoder is built by reflection on each
-    * request, and every refresh reads through one. */
+    * request, and every refresh returns its rows through one. */
   private lazy val rowEncoder: Encoder[TfRow] = Encoders.product[TfRow]
 
   /** The connector's source options for `paths`, each list a JSON array. */
@@ -133,19 +135,87 @@ object Terraform {
     * (graft.sources.TerraformTableProvider). */
   private[graft] def globOnce(conf: org.apache.hadoop.conf.Configuration,
       globs: Seq[String]): Seq[FileStatus] =
-    globs.flatMap { g =>
+    globLists(conf, Seq(globs)).head
+
+  /** [[globOnce]] of several source lists in one listing: the result per
+    * list is what `globOnce` returns for it, but a directory that wildcard
+    * directory patterns match is listed once however many globs, of
+    * however many lists, name its children.
+    * Each glob whose directory and last path component are both patterns
+    * is split there: each distinct directory pattern is expanded once
+    * (`globStatus`, its directory matches kept), each directory it matches
+    * is listed once, and the child names are matched against every glob's
+    * last component, with the child paths and the per-glob order
+    * `globStatus` gives. The rest keep their own route: `**`
+    * ([[recursiveGlob]]), and `globStatus` for a literal directory or last
+    * component (expanding a literal directory is a stat the glob's own
+    * `globStatus` does not pay), escapes and a `{…}` group spanning `/`
+    * (Hadoop expands those before it splits the path). */
+  private[graft] def globLists(conf: org.apache.hadoop.conf.Configuration,
+      lists: Seq[Seq[String]]): Seq[Seq[FileStatus]] = {
+    def orNone[A](body: => A, none: A): A = try body catch { case _: java.io.FileNotFoundException => none }
+    val splits = lists.flatten.distinct.flatMap(g => splitGlob(conf, g).map(g -> _)).toMap
+    // directory pattern -> the directories it matches
+    val dirs = splits.values.map(s => (s.dir, s.fs)).toMap.map { case (pattern, fs) =>
+      pattern -> Option(fs.globStatus(pattern)).toSeq.flatten.filter(_.isDirectory).map(_.getPath)
+    }
+    val children = scala.collection.mutable.HashMap.empty[Path, Array[FileStatus]]
+    def listed(fs: FileSystem, dir: Path): Array[FileStatus] =
+      children.getOrElseUpdate(dir, orNone(fs.listStatus(dir), Array.empty))
+    def matches(g: String): Seq[FileStatus] =
       // Hadoop's globStatus has NO recursive `**` (each path component
       // degrades to `*`) — patterns containing it take ONE recursive
       // listing ([[listTree]]; a single LIST round on object stores)
       // filtered by a doublestar-style matcher, reproducing go-getter's
       // glob semantics
       if (g.contains("**")) recursiveGlob(conf, g)
-      else {
-        val hp = new Path(g)
-        Option(hp.getFileSystem(conf).globStatus(hp)).toSeq.flatten
+      else splits.get(g) match {
+        case Some(s) =>
+          dirs(s.dir).flatMap { dir =>
+            listed(s.fs, dir).filter(c => s.name(c.getPath.getName)).map { c =>
+              c.setPath(new Path(dir, c.getPath.getName)); c
+            }
+          }.sortWith(_.compareTo(_) < 0)
+        case None =>
+          val hp = new Path(g)
+          Option(hp.getFileSystem(conf).globStatus(hp)).toSeq.flatten
       }
-    }.filter(_.isFile)
-      .distinctBy(_.getPath.toString)
+    lists.map(_.flatMap(matches).filter(_.isFile).distinctBy(_.getPath.toString))
+  }
+
+  /** A glob split at its last `/`: the directory pattern, its FileSystem
+    * and the test of the child names. */
+  private final case class SplitGlob(dir: Path, fs: FileSystem, name: String => Boolean)
+
+  private def splitGlob(conf: org.apache.hadoop.conf.Configuration, glob: String): Option[SplitGlob] = {
+    var depth = 0
+    val braceSpansSlash = glob.exists { c =>
+      if (c == '{') depth += 1 else if (c == '}') depth -= 1
+      c == '/' && depth > 0
+    }
+    if (glob.contains("**") || glob.contains('\\') || braceSpansSlash) None
+    else {
+      val hp = new Path(glob)
+      for {
+        dir <- Option(hp.getParent).filter(_.toUri.getPath.exists("*?[{".contains(_)))
+        name <- nameTest(hp.getName)
+      } yield SplitGlob(dir, hp.getFileSystem(conf), name)
+    }
+  }
+
+  /** The name test of a last path component that is a pattern, as
+    * `globStatus` applies it (Hadoop's GlobPattern, an re2j automaton).
+    * `*` and a plain suffix, the usual `*.tf`, is the same test as a
+    * suffix check (GlobPattern's `*` is a dot-all `.*`): in a JFR of a
+    * `tf_cold_ingest` run, matching every name through GlobPattern took
+    * 1.9 % of the timed loop's samples. */
+  private def nameTest(pattern: String): Option[String => Boolean] = {
+    val suffix = pattern.drop(1)
+    if (pattern.startsWith("*") && suffix.forall(c => c.isLetterOrDigit || "._-".contains(c)))
+      Some(_.endsWith(suffix))
+    else scala.util.Try(new org.apache.hadoop.fs.GlobPattern(pattern)).toOption
+      .filter(_.hasWildcard).map(p => (name: String) => p.matches(name))
+  }
 
   private def recursiveGlob(conf: org.apache.hadoop.conf.Configuration,
       glob: String): Seq[FileStatus] = {
@@ -299,10 +369,12 @@ object Terraform {
     }
   }
 
-  // ---- the seven published tables (column order = reference declaration)
+  // ---- the seven published tables (column order = reference declaration),
+  // each a filter and a projection of untyped rows: a filter of a typed
+  // Dataset binds its encoder again
 
-  def resource(rows: Dataset[TfRow]): DataFrame =
-    rows.filter(col("table") === "resource").select(
+  def resource(rows: Dataset[_]): DataFrame =
+    rows.toDF().filter(col("table") === "resource").select(
       col("name"), col("tfType").as("type"), col("mode"), col("address"),
       col("arguments"), col("attributes"), col("attributesStd").as("attributes_std"),
       col("count"), col("countSrc").as("count_src"), col("forEach").as("for_each"),
@@ -310,22 +382,22 @@ object Terraform {
       col("startLine").as("start_line"), col("endLine").as("end_line"),
       col("source"), col("path"))
 
-  def dataSource(rows: Dataset[TfRow]): DataFrame =
-    rows.filter(col("table") === "data_source").select(
+  def dataSource(rows: Dataset[_]): DataFrame =
+    rows.toDF().filter(col("table") === "data_source").select(
       col("name"), col("tfType").as("type"), col("arguments"),
       col("count"), col("countSrc").as("count_src"), col("forEach").as("for_each"),
       col("dependsOn").as("depends_on"), col("provider"),
       col("startLine").as("start_line"), col("endLine").as("end_line"),
       col("source"), col("path"))
 
-  def local(rows: Dataset[TfRow]): DataFrame =
-    rows.filter(col("table") === "local").select(
+  def local(rows: Dataset[_]): DataFrame =
+    rows.toDF().filter(col("table") === "local").select(
       col("name"), col("value"),
       col("startLine").as("start_line"), col("endLine").as("end_line"),
       col("source"), col("path"))
 
-  def module(rows: Dataset[TfRow]): DataFrame =
-    rows.filter(col("table") === "module").select(
+  def module(rows: Dataset[_]): DataFrame =
+    rows.toDF().filter(col("table") === "module").select(
       col("name"), col("moduleSource").as("module_source"), col("version"),
       col("arguments"), col("count"), col("countSrc").as("count_src"),
       col("forEach").as("for_each"), col("dependsOn").as("depends_on"),
@@ -333,21 +405,21 @@ object Terraform {
       col("startLine").as("start_line"), col("endLine").as("end_line"),
       col("source"), col("path"))
 
-  def output(rows: Dataset[TfRow]): DataFrame =
-    rows.filter(col("table") === "output").select(
+  def output(rows: Dataset[_]): DataFrame =
+    rows.toDF().filter(col("table") === "output").select(
       col("name"), col("value"), col("description"), col("sensitive"),
       col("dependsOn").as("depends_on"),
       col("startLine").as("start_line"), col("endLine").as("end_line"),
       col("source"), col("path"))
 
-  def provider(rows: Dataset[TfRow]): DataFrame =
-    rows.filter(col("table") === "provider").select(
+  def provider(rows: Dataset[_]): DataFrame =
+    rows.toDF().filter(col("table") === "provider").select(
       col("name"), col("arguments"), col("alias"), col("version"),
       col("startLine").as("start_line"), col("endLine").as("end_line"),
       col("source"), col("path"))
 
-  def variable(rows: Dataset[TfRow]): DataFrame =
-    rows.filter(col("table") === "variable").select(
+  def variable(rows: Dataset[_]): DataFrame =
+    rows.toDF().filter(col("table") === "variable").select(
       col("name"), col("tfType").as("type"), col("defaultValue").as("default_value"),
       col("description"), col("sensitive"),
       col("startLine").as("start_line"), col("validation"),
@@ -355,8 +427,8 @@ object Terraform {
 
   /** Parse-failure channel: one row per unreadable file (the reference
     * aborts the whole scan on parse errors; we surface them queryably). */
-  def diagnostics(rows: Dataset[TfRow]): DataFrame =
-    rows.filter(col("table") === "_error")
+  def diagnostics(rows: Dataset[_]): DataFrame =
+    rows.toDF().filter(col("table") === "_error")
       .select(col("path"), col("description").as("error"))
 
   /** One listed file: its listing path, kind, length and modification
@@ -368,6 +440,7 @@ object Terraform {
     * path has more than one entry when two source lists match it. */
   private[tf] final case class Listing(startMs: Long, byPath: Map[String, Seq[Listed]]) {
     lazy val files: Seq[Listed] = byPath.valuesIterator.flatten.toSeq
+    lazy val bytes: Long = files.iterator.map(_.len).sum
 
     /** Git's racy-clean rule: a file modified within [[RacyWindowMs]] of
       * this listing's start may change again inside the same mtime tick,
@@ -381,7 +454,7 @@ object Terraform {
   private val RacyWindowMs = 2000L
 
   /** List the configured sources once, on the driver: the steps of the
-    * scan's own discovery (`sourcesByKind`, [[resolveGlobs]], [[globOnce]]). */
+    * scan's own discovery (`sourcesByKind`, [[resolveGlobs]], [[globLists]]). */
   private def list(spark: SparkSession, paths: Paths): Listing = {
     val startMs = System.currentTimeMillis()
     val files = graft.sources.TerraformTableProvider.listFiles(spark.sparkContext.hadoopConfiguration,
@@ -390,30 +463,40 @@ object Terraform {
   }
 
   /** Parse exactly `files` through the connector: no listing. */
-  private def parse(spark: SparkSession, files: Seq[Listed]): Dataset[TfRow] =
+  private def parse(spark: SparkSession, files: Seq[Listed]): DataFrame =
     read(spark, Map(graft.sources.TerraformTableProvider.ListedFilesOption ->
       graft.sources.TerraformTableProvider.renderListed(files.map(f => (f.path, f.kind, f.len)))))
 
-  /** The blocks behind registered rows. The rows are kept through
-    * graft.Engine.materialize: by default a lineage-free relation
-    * (`localCheckpoint`) whose blocks hold the rows, so no later plan over
-    * it reaches the files or an earlier generation, and the ContextCleaner
-    * drops the blocks once nothing references them. The blocks live
-    * unreplicated on the executors, the single-process trade
-    * `Engine.materialize` documents: a lost executor loses them for good,
-    * and [[refresh]] or [[ensureRegistered]] then re-parse from scratch
-    * (see [[intact]]). Under `SPARK_GRAFT_RELIABLE_PERSIST=1` the rows are
-    * persisted with lineage to the files instead, and there are no such
-    * blocks: lost ones are recomputed. */
-  private[tf] def blocks(rows: Dataset[TfRow]): Option[RDD[InternalRow]] =
-    rows.queryExecution.logical.collectFirst { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
+  /** The stored partitions behind registered rows: a few arrays of rows
+    * each ([[RowChunks]]), read through a [[ChunkedRows]] relation. They
+    * are kept through graft.Engine.materialize: by default lineage-free
+    * (`localCheckpoint`), so no later plan over them reaches the files or
+    * an earlier generation, and the ContextCleaner drops the blocks once
+    * nothing references them. The blocks live unreplicated on the
+    * executors, the single-process trade `Engine.materialize` documents: a
+    * lost executor loses them for good, and [[refresh]] or
+    * [[ensureRegistered]] then re-parse from scratch (see [[intact]]).
+    * Under `SPARK_GRAFT_RELIABLE_PERSIST=1` they are persisted with
+    * lineage to the files instead, and a lost block is recomputed. */
+  private[tf] def blocks(rows: Dataset[_]): Option[RDD[Array[UnsafeRow]]] =
+    rows.queryExecution.logical.collectFirst { case l: LogicalRDD => l.rdd }
+      .collect { case c: ChunkedRows => c.stored }
 
-  /** Can `rows` still be read? A lineage-free relation cannot recompute a
-    * lost block, so every block must still be present (asked of the
-    * driver's block manager master, no job); a relation persisted with
-    * lineage always can. */
-  private def intact(rows: Dataset[TfRow]): Boolean =
-    blocks(rows).forall(org.apache.spark.GraftBlocks.allPresent)
+  /** Can `rows` still be read? Stored lineage-free, every block must still
+    * be present (asked of the driver's block manager master, no job);
+    * stored with lineage, a lost block is recomputed. */
+  private def intact(rows: Dataset[_]): Boolean =
+    blocks(rows).forall(s => !s.isCheckpointed || org.apache.spark.GraftBlocks.allPresent(s))
+
+  /** Release the stored partitions behind `rows` (graft.Engine.release). */
+  private def release(rows: Dataset[_]): Unit = blocks(rows).foreach(graft.Engine.release)
+
+  /** Keep `rows`, stand-alone UnsafeRows of `schema`, as a relation: stored
+    * in chunks ([[blocks]]) and sized at `bytes`, the listing's bytes, so
+    * joins over the views still broadcast. */
+  private def store(spark: SparkSession, rows: RDD[UnsafeRow], schema: StructType, bytes: Long): DataFrame =
+    org.apache.spark.sql.GraftRows.of(spark,
+      new ChunkedRows(graft.Engine.materialize(RowChunks.chunked(rows))), schema, bytes)
 
   /** Register all seven tables as temp views (+ the function shims) over
     * one parse of the configured corpus — the analog of the reference
@@ -429,18 +512,24 @@ object Terraform {
   def register(spark: SparkSession, paths: Paths): Dataset[TfRow] = ensureLock.synchronized {
     val prev = Option(registrations.get(spark))
     val r = parseAll(spark, paths, list(spark, paths))
-    // reliable persist only: the CacheManager holds a persisted relation
-    // until it is unpersisted, and a DataFrame built on it re-reads the files
-    prev.foreach(p => graft.Engine.release(p.rows))
+    // reliable persist only: the stored partitions stay persisted until
+    // released, and a DataFrame built on them re-reads the files
+    prev.foreach(p => release(p.rows))
     r
   }
 
   /** Parse every listed file and make the result the session's registration. */
-  private def parseAll(spark: SparkSession, paths: Paths, listing: Listing): Dataset[TfRow] =
-    publish(spark, Registration(paths, listing, graft.Engine.materialize(parse(spark, listing.files))))
+  private def parseAll(spark: SparkSession, paths: Paths, listing: Listing): Dataset[TfRow] = {
+    val parsed = parse(spark, listing.files)
+    publish(spark, Registration(paths, listing, store(spark,
+      RowChunks.copies(parsed.queryExecution.toRdd, parsed.schema), parsed.schema, listing.bytes)))
+  }
 
   /** A session's registered configuration, its listing and its rows. */
-  private final case class Registration(paths: Paths, listing: Listing, rows: Dataset[TfRow])
+  private final case class Registration(paths: Paths, listing: Listing, rows: DataFrame) {
+    /** The rows as returned: typed once per registration. */
+    lazy val typed: Dataset[TfRow] = rows.as[TfRow](rowEncoder)
+  }
 
   private val registrations = new java.util.concurrent.ConcurrentHashMap[SparkSession, Registration]()
 
@@ -461,7 +550,7 @@ object Terraform {
     // a `_v` view holds the analyzed plan of the rows it was built over
     if (hadVariantViews) registerVariantViews(spark)
     registerFunctions(spark)
-    r
+    reg.typed
   }
 
   /** Idempotent [[register]]: no-op when `paths` is already this session's
@@ -477,7 +566,7 @@ object Terraform {
     // paths must not both parse
     ensureLock.synchronized {
       val prev = registrations.get(spark)
-      if (prev == null || prev.paths != paths || !intact(prev.rows)) register(spark, paths) else prev.rows
+      if (prev == null || prev.paths != paths || !intact(prev.rows)) register(spark, paths) else prev.typed
     }
 
   /** Watch-path refresh for the batch views — the analog of the reference's
@@ -510,9 +599,10 @@ object Terraform {
     * `SPARK_GRAFT_RELIABLE_PERSIST=1`, where each generation keeps its
     * lineage to the files rather than to the generation before it.
     *
-    * Superseded rows are left to the ContextCleaner (under reliable persist
-    * they are unpersisted): a DataFrame built before the refresh keeps
-    * reading its snapshot. (The continuous analog is [[streamRows]].) */
+    * Superseded rows are left to the ContextCleaner: a DataFrame built
+    * before the refresh keeps reading its snapshot, carried rows and all.
+    * Under reliable persist they are unpersisted, and such a DataFrame
+    * reads the files again. (The continuous analog is [[streamRows]].) */
   def refresh(spark: SparkSession): Dataset[TfRow] = ensureLock.synchronized {
     val prev = registrations.get(spark)
     require(prev != null, "Terraform.refresh: no prior Terraform.register for this session")
@@ -521,48 +611,38 @@ object Terraform {
     val stale = before.keySet.filter(p => now.byPath.get(p).forall(_ != before(p)) || prev.listing.racy(p))
     val parsed = now.byPath.keySet.filter(p => stale(p) || !before.contains(p))
     val lost = !intact(prev.rows)
-    blocks(prev.rows) match {
-      case _ if !lost && stale.isEmpty && parsed.isEmpty => prev.rows
-      case Some(rdd) if !lost =>
+    if (!lost && stale.isEmpty && parsed.isEmpty) prev.typed
+    else blocks(prev.rows).filter(s => !lost && s.isCheckpointed) match {
+      case Some(stored) =>
         publish(spark, Registration(prev.paths, now,
-          carryOver(spark, prev.rows, rdd, stale, parsed.toSeq.flatMap(now.byPath), now)))
-      case _ => // lost, or persisted with lineage, which a carry-over would chain
+          carryOver(spark, prev.rows, stored, stale, parsed.toSeq.flatMap(now.byPath), now)))
+      case None => // lost, or stored with lineage, which a carry-over would chain
         val r = parseAll(spark, prev.paths, now)
-        graft.Engine.release(prev.rows)
+        release(prev.rows)
         r
     }
   }
 
-  /** The rows of `now`: the previous rows, whose blocks are `stored`,
-    * minus the `stale` paths, plus a parse of the `fresh` files, in
-    * [[scanPartitions]] partitions of `now`, materialized. Each carried
+  /** The rows of `now`: the previous rows, stored in `stored`, minus the
+    * `stale` paths, plus a parse of the `fresh` files, in
+    * [[scanPartitions]] partitions of `now`, stored. Each carried
     * partition keeps its rows where they are and takes the fresh rows of
     * one path-hash bucket, so only the fresh rows move and each partition
     * takes an even share of them; a new partition count redistributes
-    * every row by path hash. The stale filter is a closure,
-    * not a plan: every refresh runs the same classes. */
-  private def carryOver(spark: SparkSession, prev: Dataset[TfRow], stored: RDD[InternalRow],
-                        stale: Set[String], fresh: Seq[Listed], now: Listing): Dataset[TfRow] = {
+    * every row by path hash ([[RowChunks.merged]]). Carried rows are the
+    * previous generation's row objects, not copies. The stale filter is a
+    * closure, not a plan: every refresh runs the same classes. */
+  private def carryOver(spark: SparkSession, prev: DataFrame, stored: RDD[Array[UnsafeRow]],
+                        stale: Set[String], fresh: Seq[Listed], now: Listing): DataFrame = {
     val schema = prev.schema
     val at = schema.fieldIndex("path")
-    val gone = stale.map(UTF8String.fromString)
-    val carried = stored.mapPartitions(_.filterNot(r => gone(r.getUTF8String(at))), preservesPartitioning = true)
-    val parsed: RDD[InternalRow] =
-      if (fresh.isEmpty) spark.sparkContext.emptyRDD[InternalRow]
-      else parse(spark, fresh).queryExecution.toRdd.mapPartitions { it =>
-        val unsafe = UnsafeProjection.create(schema)
-        it.map(unsafe(_).copy(): InternalRow)
-      }
-    val n = scanPartitions(now.files.size, now.files.iterator.map(_.len).sum,
+    val carried = RowChunks.without(stored, stale.map(UTF8String.fromString), at)
+    val parsed =
+      if (fresh.isEmpty) spark.sparkContext.emptyRDD[UnsafeRow]
+      else RowChunks.copies(parse(spark, fresh).queryExecution.toRdd, schema)
+    val n = scanPartitions(now.files.size, now.bytes,
       spark.sessionState.conf.filesMaxPartitionBytes, spark.sparkContext.defaultParallelism)
-    def byPath(rows: RDD[InternalRow]) =
-      rows.keyBy(_.getUTF8String(at).hashCode).partitionBy(new HashPartitioner(n)).values
-    val next =
-      if (carried.getNumPartitions == n) carried.zipPartitions(byPath(parsed))(_ ++ _)
-      else byPath(carried ++ parsed)
-    // sized like a parse of the listing, so joins over the views still broadcast
-    graft.Engine.materialize(org.apache.spark.sql.GraftRows.of(spark, next, schema, now.files.iterator.map(_.len).sum)
-      .as[TfRow](rowEncoder))
+    store(spark, RowChunks.merged(carried, parsed, at, n), schema, now.bytes)
   }
 
   /** Postgres array-index semantics for `->`/`->>`: a negative integer

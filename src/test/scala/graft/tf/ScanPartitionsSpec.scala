@@ -252,6 +252,34 @@ class ScanPartitionsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     leaveOnFixtures()
   }
 
+  test("a DataFrame built before a refresh keeps reading its snapshot; the view moves on") {
+    // the snapshot is the stored rows; under reliable persist a refresh
+    // unpersists them and such a DataFrame re-reads the files
+    assume(!sys.env.get("SPARK_GRAFT_RELIABLE_PERSIST").contains("1"))
+    val (d, p) = corpus("refresh-snapshot", 8)
+    Terraform.register(spark, p)
+    def names(df: org.apache.spark.sql.DataFrame) = df.select("name").collect().map(_.getString(0)).toSet
+    val first = spark.table("terraform_resource")
+    val firstNames = names(first)
+    assert(firstNames == (0 until 8).map(i => s"b$i").toSet)
+    // two refreshes: the second carries rows the first carried over
+    Files.writeString(d.resolve("f001.tf"), bucket("renamed"))
+    Files.delete(d.resolve("f002.tf"))
+    Files.writeString(d.resolve("f100.tf"), bucket("added"))
+    Terraform.refresh(spark)
+    val second = spark.table("terraform_resource")
+    val secondNames = firstNames -- Set("b1", "b2") ++ Set("renamed", "added")
+    assert(names(second) == secondNames)
+    Files.writeString(d.resolve("f003.tf"), bucket("again"))
+    Terraform.refresh(spark)
+    // a collected generation would take its blocks with it
+    System.gc(); Thread.sleep(200)
+    assert(names(first) == firstNames, "the DataFrame built before the refreshes")
+    assert(names(second) == secondNames, "the DataFrame built between the refreshes")
+    assert(names(spark.table("terraform_resource")) == secondNames - "b3" + "again")
+    leaveOnFixtures()
+  }
+
   test("a refresh reaches the variant views") {
     val (d, p) = corpus("refresh-variant", 6)
     Terraform.register(spark, p)

@@ -340,6 +340,84 @@ class SourcesSpec extends SparkSpecBase {
     assert(rows.filter(col("table") === "resource").count() == 2)
   }
 
+  /** The listing `globOnce` made glob by glob: Hadoop `globStatus` per
+    * glob (a `**` glob through the recursive route alone), directory
+    * matches dropped, first occurrence kept. */
+  private def globStatusListing(conf: org.apache.hadoop.conf.Configuration,
+      globs: Seq[String]): Seq[org.apache.hadoop.fs.FileStatus] =
+    globs.flatMap { g =>
+      if (g.contains("**")) Terraform.globOnce(conf, Seq(g))
+      else {
+        val hp = new org.apache.hadoop.fs.Path(g)
+        Option(hp.getFileSystem(conf).globStatus(hp)).toSeq.flatten
+      }
+    }.filter(_.isFile).distinctBy(_.getPath.toString)
+
+  test("discovery: the shared listing equals globStatus glob by glob, per source list") {
+    val root = Files.createTempDirectory("graft-globlists").toFile
+    Seq("top.tf", "a/x.tf", "a/y.tf", "a/ab.tf", "a/z.tf.json", "a/s.tfstate",
+        "b/x.tf", "b/w.tfplan.json", "b/q.txt", "c/main.tf", "c/second.tf",
+        "d.tf/inner.tf").foreach { rel =>
+      val f = JPaths.get(root.getPath, rel)
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, "resource \"aws_s3_bucket\" \"b\" {}\n")
+    }
+    // a directory whose name matches a file pattern
+    Files.createDirectories(JPaths.get(root.getPath, "a", "sub.tf"))
+    val r = root.getAbsolutePath
+    val lists = Seq(
+      Seq(s"$r/*/*.tf", s"$r/*/*.tf.json", s"$r/a/x.tf", s"$r/*/{main,second}.tf"),
+      Seq(s"$r/*/*.tfplan.json", s"$r/[ab]/?.tf", s"$r/a/*", s"$r/missing/*.tf",
+        s"/nonexistent-graft-base/*/*.tf"),
+      Seq(s"$r/*/*.tfstate", s"$r/*/*.tf", s"$r/*.tf", s"$r/{a/x,b/x}.tf"),
+      Seq("fixtures/*.tf", "*.sbt", "fixtures/{main,second}.tf", s"file:$r/a/*.tf",
+        s"file://$r/b/*.tf", s"$r/**/*.tf"),
+      Seq.empty)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val got = Terraform.globLists(conf, lists)
+    assert(got.size == lists.size)
+    def key(sts: Seq[org.apache.hadoop.fs.FileStatus]) =
+      sts.map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+    lists.zip(got).foreach { case (globs, files) =>
+      assert(key(files) == key(globStatusListing(conf, globs)), s"listing of $globs")
+    }
+    // the shapes above matched what they should: a file once per list but
+    // in every list that globs it, directories dropped, a relative glob
+    // resolved against the CWD
+    def has(files: Seq[org.apache.hadoop.fs.FileStatus], rel: String) =
+      files.count(_.getPath.toUri.getPath == s"$r/$rel")
+    assert(has(got(0), "a/x.tf") == 1 && has(got(1), "a/x.tf") == 1 && has(got(2), "a/x.tf") == 1)
+    assert(has(got(1), "a/sub.tf") == 0 && has(got(1), "a/s.tfstate") == 1)
+    assert(got(3).exists(_.getPath.toString.endsWith("/build.sbt")))
+    assert(got(3).exists(_.getPath.toString.endsWith("/d.tf/inner.tf")))
+  }
+
+  test("a listing of four globs over one directory pattern lists no more than one globStatus pass") {
+    val dir = Files.createTempDirectory("graft-s3-shared").toFile
+    Seq("a/m.tf", "a/m.tf.json", "b/p.tfplan.json", "b/s.tfstate", "c/n.tf").foreach { rel =>
+      val f = JPaths.get(dir.getPath, rel)
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, "resource \"aws_instance\" \"one\" {}\n")
+    }
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.s3a.impl", classOf[MockS3FileSystem].getName)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val base = s"s3a://bucket${dir.getAbsolutePath}"
+    MockS3FileSystem.resetCounters()
+    val hp = new org.apache.hadoop.fs.Path(s"$base/*/*.tf")
+    hp.getFileSystem(conf).globStatus(hp)
+    val (lists1, total1) = (MockS3FileSystem.listStatusCalls.get, MockS3FileSystem.totalCalls)
+
+    MockS3FileSystem.resetCounters()
+    val got = Terraform.globLists(conf, Seq(Seq(s"$base/*/*.tf", s"$base/*/*.tf.json"),
+      Seq(s"$base/*/*.tfplan.json"), Seq(s"$base/*/*.tfstate")))
+    assert(got.map(_.map(_.getPath.getName).sorted) ==
+      Seq(Seq("m.tf", "m.tf.json", "n.tf"), Seq("p.tfplan.json"), Seq("s.tfstate")))
+    assert(MockS3FileSystem.listStatusCalls.get <= lists1 && MockS3FileSystem.totalCalls <= total1,
+      s"four globs: ${MockS3FileSystem.listStatusCalls.get} lists, ${MockS3FileSystem.totalCalls} calls; " +
+        s"one globStatus pass: $lists1 lists, $total1 calls")
+  }
+
   test("ensureRegistered: same paths reuse the cached parse, new paths re-register") {
     val dir = new java.io.File("fixtures").getAbsolutePath
     val p = Terraform.Paths(configurationFilePaths = Seq(s"$dir/*.tf"))
