@@ -47,6 +47,8 @@ import scala.jdk.CollectionConverters._
   *
   * [[Terraform.rows]] reads the same connector through the internal
   * [[TerraformTableProvider.RowsTable]]: every row, under its TfRow names.
+  * [[Terraform.streamRows]] streams that table: the micro-batch stream
+  * (`TerraformScan.toMicroBatchStream`) is the only Terraform file watch.
   */
 final class TerraformTableProvider extends TableProvider with DataSourceRegister {
 

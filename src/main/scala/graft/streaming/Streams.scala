@@ -710,27 +710,8 @@ object Streams {
   final case class AsOfMatch(purchase_id: Long, user_id: Long, p_us: Long,
       view_id: Option[Long], v_us: Option[Long])
 
-  /** Streaming as-of join — the continuous twin of the batch
-    * `x_events_asof`: per-user keyed state holds the latest view seen so
-    * far; each purchase emits its match against the latest view AT OR
-    * BEFORE it. Within a batch, events are ordered by (time, type) with
-    * views first at equal timestamps, mirroring the batch tie-break;
-    * across batches the stored view only advances lexicographically on
-    * (us, event_id), so a late duplicate-timestamp view with a lower id
-    * can't displace the winner the batch oracle picks. A late purchase
-    * older than the stored view emits a NULL match (the batch "latest at
-    * or before" semantics), never a match to the future. State is one
-    * (view_id, v_us) pair per user, partitioned by the group key;
-    * `idleTimeout` evicts users idle longer than the duration so state
-    * stays bounded under ever-growing user cardinality (a purchase
-    * arriving after eviction re-matches as if no view were seen — the
-    * same loss any watermark assigns to that-late data). Opt-in: a
-    * registered processing-time timeout keeps the engine from reaching
-    * quiescence under `processAllAvailable`, so it suits continuously
-    * triggered production queries, not drain-and-stop runs.
-    * Input tuples: (event_id, user_id, us, event_type). */
-  /** The as-of resolver all three streaming variants share: walk the
-    * user's events in (us, view-before-purchase, event_id) order — the
+  /** The as-of resolver of [[asofMatchesWatermarked]]: walk the user's
+    * events in (us, view-before-purchase, event_id) order — the
     * batch tagged-union's order — against the latest-view state. A view
     * advances the stored (view_id, v_us) only lexicographically on
     * (us, event_id), so a duplicate-timestamp view with a lower id
@@ -753,26 +734,6 @@ object Streams {
     (latest, out.result())
   }
 
-  def asofMatches(events: Dataset[(Long, Long, Long, String)],
-      idleTimeout: Option[String] = None): Dataset[AsOfMatch] = {
-    import events.sparkSession.implicits._
-    val timeoutConf = if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.groupByKey(_._2)
-      .flatMapGroupsWithState[(Long, Long), AsOfMatch](
-        OutputMode.Append, timeoutConf) {
-        case (uid, rows, state: GroupState[(Long, Long)]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val (latest, out) = resolveAsof(uid, state.getOption,
-              rows.map(r => (r._1, r._3, r._4)).toSeq)
-            latest.foreach(state.update)
-            idleTimeout.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
-      }
-  }
-
   /** Per-user state for [[asofMatchesWatermarked]]: events newer than
     * the watermark still awaiting resolution order, plus the latest
     * resolved view. */
@@ -786,18 +747,17 @@ object Streams {
     * group every micro-batch as a no-op drain. */
   private val NeverMs = Long.MaxValue / 4
 
-  /** The ORDER-ROBUST streaming as-of join — [[asofMatches]] given the
-    * conversion-labeler treatment: identical matches under ordered
-    * arrival, but correct under arbitrary cross-batch disorder up to
-    * the watermark's allowed lateness, and NO processing-time timeout
-    * anywhere, so `processAllAvailable` quiescence is safe (the hazard
-    * the frontier variant's idleTimeout documents). Incoming events
-    * buffer in per-user state and resolve only once the global
-    * event-time watermark passes them, replaying each user's timeline
-    * in true event-time order — a purchase delivered before an
-    * earlier-timestamped view (which [[asofMatches]] would mismatch,
-    * spec-pinned) waits until the watermark proves no earlier view can
-    * still arrive. An event-time timeout drains held purchases when
+  /** Streaming as-of join — the continuous twin of the batch
+    * `x_events_asof`: each purchase emits its match against the user's
+    * latest view AT OR BEFORE it, correct under arbitrary cross-batch
+    * disorder up to the watermark's allowed lateness. There is NO
+    * processing-time timeout anywhere, so `processAllAvailable`
+    * quiescence is safe. Incoming events buffer in per-user state and
+    * resolve only once the global event-time watermark passes them,
+    * replaying each user's timeline in true event-time order — a
+    * purchase delivered before an earlier-timestamped view (StreamsSpec
+    * pins this case) waits until the watermark proves no earlier view
+    * can still arrive. An event-time timeout drains held purchases when
     * the watermark (driven by other users' data) passes them, so a
     * silent user's matches still emit. Events older than the watermark
     * on arrival are dropped — the standard beyond-lateness loss. State
@@ -805,7 +765,7 @@ object Streams {
     * latest-view pair; the pair persists (a purchase may as-of-match a
     * view arbitrarily far back — same contract as the batch query), so
     * state is bounded by construction at one pair per user plus the
-    * horizon buffer. */
+    * horizon buffer. Input tuples: (event_id, user_id, us, event_type). */
   def asofMatchesWatermarked(events: Dataset[(Long, Long, Long, String)],
       delay: String = "1 hour"): Dataset[AsOfMatch] = {
     import events.sparkSession.implicits._
@@ -847,115 +807,20 @@ object Streams {
       }
   }
 
-  /** [[asofMatchesWatermarked]] re-expressed on Spark 4's
-    * `transformWithState` — sharing [[resolveAsof]] with both fMGWS
-    * forms (StreamsSpec pins all three variants' matches equal under
-    * the pinned cross-batch disorder). Same state decomposition as the
-    * conversion port: the held-event buffer as typed ListState
-    * (per-element appends — O(increment) while the watermark sits below
-    * the earliest held event, guarded by the oblg ValueState), the
-    * latest view as a ValueState pair, obligations as event-time timers
-    * (superseded timers fire as no-op drains). Latest-view-only users
-    * carry NO registered timer at all — nothing can become resolvable
-    * for them without new input, so unlike the fMGWS twin there is no
-    * far-future sentinel to store. Requires the RocksDB state store
-    * provider (one column family per typed state). */
-  def asofMatchesTws(events: Dataset[(Long, Long, Long, String)],
-      delay: String = "1 hour"): Dataset[AsOfMatch] = {
-    import events.sparkSession.implicits._
-    // view/purchase-only frontier — see asofMatchesWatermarked
-    val wm = events.toDF("event_id", "user_id", "us", "event_type")
-      .withColumn("ts", timestamp_micros(col("us")))
-      .withWatermark("ts", delay)
-      .filter(col("event_type").isin("view", "purchase"))
-      .select("event_id", "user_id", "us", "event_type", "ts")
-      .as[(Long, Long, Long, String, java.sql.Timestamp)]
-    wm.groupByKey(_._2)
-      .transformWithState(new AsofProcessor,
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
-  }
-
-  /** The [[asofMatchesTws]] StatefulProcessor. */
-  private[streaming] class AsofProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long, Long, String, java.sql.Timestamp), AsOfMatch] {
-    import org.apache.spark.sql.streaming.{ListState, TimeMode, TimerValues, TTLConfig}
-    import org.apache.spark.sql.{Encoder, Encoders}
-
-    @transient private var buf: ListState[(Long, Long, String)] = _
-    @transient private var latest: org.apache.spark.sql.streaming.ValueState[(Long, Long)] = _
-    // earliest held event time (µs) — the guard that makes the no-drain
-    // path a pure O(1) append; absent iff the buffer is empty
-    @transient private var oblg: org.apache.spark.sql.streaming.ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      buf = getHandle.getListState[(Long, Long, String)]("buf",
-        implicitly[Encoder[(Long, Long, String)]](Encoders.tuple(
-          Encoders.scalaLong, Encoders.scalaLong, Encoders.STRING)), TTLConfig.NONE)
-      latest = getHandle.getValueState[(Long, Long)]("latest",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-      oblg = getHandle.getValueState[Long]("oblg", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    private def setObligation(obligationUs: Long, timers: TimerValues): Unit = {
-      oblg.update(obligationUs)
-      getHandle.registerTimer(
-        math.max(obligationUs / 1000L + 1L, timers.getCurrentWatermarkInMs + 1L))
-    }
-
-    private def resolve(uid: Long, incoming: List[(Long, Long, String)],
-        timers: TimerValues): Iterator[AsOfMatch] = {
-      val wmUs = timers.getCurrentWatermarkInMs * 1000L
-      // kept rows all satisfy us >= wmUs — none resolvable this call
-      val kept = incoming.filter(_._2 >= wmUs)
-      // FAST PATH: the watermark has not reached the earliest held
-      // event, so nothing can drain — append per-element and tighten
-      if (oblg.exists() && oblg.get() >= wmUs) {
-        if (kept.nonEmpty) {
-          buf.appendList(kept.toArray)
-          setObligation(math.min(oblg.get(), kept.map(_._2).min), timers)
-        }
-        return Iterator.empty
-      }
-      val held = if (buf.exists()) buf.get().toList else Nil
-      val (ready, hold) = (held ++ kept).partition(_._2 < wmUs)
-      val latest0 = if (latest.exists()) Some(latest.get()) else None
-      val (latestNext, matches) = Streams.resolveAsof(uid, latest0, ready)
-      if (hold.isEmpty) buf.clear() else buf.put(hold.toArray)
-      latestNext match {
-        case Some(lv) => latest.update(lv)
-        case None => latest.clear()
-      }
-      if (hold.nonEmpty) setObligation(hold.map(_._2).min, timers) else oblg.clear()
-      matches.iterator
-    }
-
-    override def handleInputRows(uid: Long,
-        rows: Iterator[(Long, Long, Long, String, java.sql.Timestamp)],
-        timers: TimerValues): Iterator[AsOfMatch] =
-      resolve(uid, rows.map(r => (r._1, r._3, r._4)).toList, timers)
-
-    override def handleExpiredTimer(uid: Long, timers: TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[AsOfMatch] =
-      resolve(uid, Nil, timers)
-  }
-
   /** One resolved conversion label (the forward-as-of outcome). */
   final case class ConversionLabel(event_id: Long, user_id: Long, v_us: Long,
       purchase_id: Option[Long], converted: Boolean)
 
-  /** The conversion resolver both streaming variants share: walk the
+  /** The conversion resolver of [[conversionLabelsWatermarked]]: walk the
     * user's events in (us, event_id) order against the pending-view
     * state — an event expires pending views whose 1-hour window it has
     * passed (not-converted), a purchase resolves every pending earlier
     * view (converted, necessarily by the FIRST later purchase), a view
-    * joins the pending set. `frontierUs`, when supplied (the watermarked
-    * variant passes the global watermark), additionally expires pending
-    * views whose window the frontier has passed even if no same-user
-    * event ever arrives. */
+    * joins the pending set. `frontierUs` (the global watermark) then
+    * expires pending views whose window it has passed even if no
+    * same-user event ever arrives. */
   private[streaming] def resolveConversions(uid: Long, pending0: List[(Long, Long)],
-      events: Seq[(Long, Long, String)], frontierUs: Option[Long],
+      events: Seq[(Long, Long, String)], frontierUs: Long,
       windowUs: Long): (List[(Long, Long)], Seq[ConversionLabel]) = {
     var pending = pending0
     val out = Seq.newBuilder[ConversionLabel]
@@ -972,54 +837,10 @@ object Streams {
       }
       if (tpe == "view") pending = (eid, eus) :: pending
     }
-    frontierUs.foreach { f =>
-      val (expired, live) = pending.partition { case (_, vus) => f > vus + windowUs }
-      expired.foreach { case (vid, vus) =>
-        out += ConversionLabel(vid, uid, vus, None, converted = false) }
-      pending = live
-    }
-    (pending, out.result())
-  }
-
-  /** Streaming CONVERSION labeling — the stateful forward-as-of twin of
-    * x_events_conversion: per-user state holds the views still awaiting
-    * an outcome; a purchase resolves every pending earlier view
-    * (converted, with the resolving purchase's id — necessarily the
-    * FIRST later purchase, since an earlier one would already have
-    * resolved them), and ANY later event advances the user's frontier,
-    * resolving views whose 1-hour window it has passed as
-    * not-converted. Labels resolve on the user's own event-time
-    * frontier with NO cross-batch reorder buffer, so this variant
-    * carries an explicit PRECONDITION: each user's events must arrive
-    * in event-time order ACROSS micro-batches (within a batch any order
-    * is fine — the batch is sorted before resolution). A purchase
-    * delivered in batch N followed by an earlier-timestamped view in
-    * batch N+1 labels that view not-converted where the batch query
-    * labels it converted (StreamsSpec pins this divergence). When
-    * arrival order is not guaranteed, use
-    * [[conversionLabelsWatermarked]], which buffers per-user events
-    * until the global watermark passes them. State is O(pending views
-    * per user); pass `idleTimeout` to evict abandoned users. */
-  def conversionLabels(events: Dataset[(Long, Long, Long, String)],
-      windowUs: Long = 3600000000L,
-      idleTimeout: Option[String] = None): Dataset[ConversionLabel] = {
-    import events.sparkSession.implicits._
-    val timeoutConf = if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.groupByKey(_._2)
-      .flatMapGroupsWithState[List[(Long, Long)], ConversionLabel](
-        OutputMode.Append, timeoutConf) {
-        case (uid, rows, state: GroupState[List[(Long, Long)]]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val (pending, labels) = resolveConversions(uid,
-              state.getOption.getOrElse(Nil),
-              rows.map(r => (r._1, r._3, r._4)).toSeq, None, windowUs)
-            state.update(pending)
-            idleTimeout.foreach(state.setTimeoutDuration)
-            labels.iterator
-          }
-      }
+    val (expired, live) = pending.partition { case (_, vus) => frontierUs > vus + windowUs }
+    expired.foreach { case (vid, vus) =>
+      out += ConversionLabel(vid, uid, vus, None, converted = false) }
+    (live, out.result())
   }
 
   /** Per-user state for [[conversionLabelsWatermarked]]: events newer
@@ -1028,16 +849,18 @@ object Streams {
   final case class ConvState(buf: List[(Long, Long, String)],
       pending: List[(Long, Long)])
 
-  /** The ORDER-ROBUST streaming conversion labeler: identical labels to
-    * [[conversionLabels]] under ordered arrival, but correct under
-    * arbitrary cross-batch disorder up to the watermark's allowed
-    * lateness. Incoming events are buffered in per-user state and only
-    * resolved once the global event-time watermark (arrival max −
-    * `delay`) passes them, so every user's timeline is replayed in true
-    * event-time order no matter how micro-batches sliced it; a label is
-    * then a pure function of the event-time sequence, the property the
-    * frontier-only variant can only promise under its ordered-arrival
-    * precondition. The watermark also acts as a global frontier:
+  /** Streaming CONVERSION labeling — the stateful forward-as-of twin of
+    * x_events_conversion: a purchase resolves every pending earlier view
+    * (converted, with the resolving purchase's id — necessarily the
+    * FIRST later purchase, since an earlier one would already have
+    * resolved them), and a view whose 1-hour window has passed resolves
+    * not-converted. Labels are correct under arbitrary cross-batch
+    * disorder up to the watermark's allowed lateness: incoming events
+    * are buffered in per-user state and only resolved once the global
+    * event-time watermark (arrival max − `delay`) passes them, so every
+    * user's timeline is replayed in true event-time order no matter how
+    * micro-batches sliced it, and a label is a pure function of the
+    * event-time sequence. The watermark also acts as a global frontier:
     * pending views whose window it passes resolve not-converted with no
     * flush event needed, and an event-time timeout re-invokes idle
     * users when the watermark (driven by OTHER users' data) passes one
@@ -1045,7 +868,8 @@ object Streams {
     * are dropped — the standard loss any watermark assigns to
     * beyond-lateness data. State per user is O(events within the
     * lateness horizon + pending views within the window) — bounded by
-    * construction, so no idle timeout is needed. */
+    * construction, so no idle timeout is needed.
+    * Input tuples: (event_id, user_id, us, event_type). */
   def conversionLabelsWatermarked(events: Dataset[(Long, Long, Long, String)],
       delay: String = "1 hour",
       windowUs: Long = 3600000000L): Dataset[ConversionLabel] = {
@@ -1071,7 +895,7 @@ object Streams {
           // can still arrive and must keep waiting).
           val (ready, hold) = (st.buf ++ incoming).partition(_._2 < wmUs)
           val (pending, labels) = resolveConversions(
-            uid, st.pending, ready, Some(wmUs), windowUs)
+            uid, st.pending, ready, wmUs, windowUs)
           if (pending.isEmpty && hold.isEmpty) state.remove()
           else {
             state.update(ConvState(hold, pending))
@@ -1084,127 +908,6 @@ object Streams {
           }
           labels.iterator
       }
-  }
-
-  /** [[conversionLabelsWatermarked]] re-expressed on Spark 4's
-    * `transformWithState` — the modern arbitrary-state API that
-    * replaces `flatMapGroupsWithState`. Same semantics (StreamsSpec
-    * pins all three variants' outputs equal on the pinned-disorder
-    * case), different machinery, each piece the API's idiomatic form:
-    *
-    *  - TWO typed `ListState` columns (the held-event buffer and the
-    *    pending-view set) instead of one product-encoded state blob —
-    *    the state store serializes each list element individually, so
-    *    appending one event no longer rewrites the whole state value;
-    *  - a registered event-time TIMER per obligation instead of the
-    *    single `setTimeoutTimestamp` slot — `handleExpiredTimer` fires
-    *    when the watermark passes it even if the user never sends
-    *    another event (superseded timers fire as no-ops: resolution
-    *    only ever processes what the watermark allows, so extra
-    *    wakeups emit nothing);
-    *  - `TimerValues.getCurrentWatermarkInMs` supplies the frontier in
-    *    BOTH code paths uniformly.
-    *
-    * At 100 TB the practical win over the fMGWS twin is the per-element
-    * list state: while the watermark sits below a user's earliest
-    * obligation (tracked in a ValueState guard), new events APPEND to
-    * the list per-element — O(increment), no read, no rewrite — where
-    * the fMGWS variant re-serializes its whole state blob every
-    * micro-batch; the full read+rewrite happens only on drains, when
-    * the watermark actually makes something resolvable.
-    *
-    * Requires the RocksDB state store (each typed state is its own
-    * column family): set
-    * `spark.sql.streaming.stateStore.providerClass` to
-    * `...state.RocksDBStateStoreProvider` — the provider a production
-    * deployment runs anyway for large keyed state. */
-  def conversionLabelsTws(events: Dataset[(Long, Long, Long, String)],
-      delay: String = "1 hour",
-      windowUs: Long = 3600000000L): Dataset[ConversionLabel] = {
-    import events.sparkSession.implicits._
-    val wm = events.toDF("event_id", "user_id", "us", "event_type")
-      .withColumn("ts", timestamp_micros(col("us")))
-      .withWatermark("ts", delay)
-      .select("event_id", "user_id", "us", "event_type", "ts")
-      .as[(Long, Long, Long, String, java.sql.Timestamp)]
-    wm.groupByKey(_._2)
-      .transformWithState(new ConversionProcessor(windowUs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
-  }
-
-  /** The [[conversionLabelsTws]] StatefulProcessor: held events and
-    * pending views as typed ListState, obligations as event-time
-    * timers, resolution via the shared [[resolveConversions]]. */
-  private[streaming] class ConversionProcessor(windowUs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long, Long, String, java.sql.Timestamp), ConversionLabel] {
-    import org.apache.spark.sql.streaming.{ListState, TimeMode, TimerValues, TTLConfig}
-    import org.apache.spark.sql.{Encoder, Encoders}
-
-    @transient private var buf: ListState[(Long, Long, String)] = _
-    @transient private var pending: ListState[(Long, Long)] = _
-    // earliest obligation (µs) across held events and pending windows —
-    // the guard that makes the no-drain path a pure O(1) append
-    @transient private var oblg: org.apache.spark.sql.streaming.ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      buf = getHandle.getListState[(Long, Long, String)]("buf",
-        implicitly[Encoder[(Long, Long, String)]](Encoders.tuple(
-          Encoders.scalaLong, Encoders.scalaLong, Encoders.STRING)), TTLConfig.NONE)
-      pending = getHandle.getListState[(Long, Long)]("pending",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-      oblg = getHandle.getValueState[Long]("oblg", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    private def setObligation(obligationUs: Long, timers: TimerValues): Unit = {
-      oblg.update(obligationUs)
-      getHandle.registerTimer(
-        math.max(obligationUs / 1000L + 1L, timers.getCurrentWatermarkInMs + 1L))
-    }
-
-    private def resolve(uid: Long, incoming: List[(Long, Long, String)],
-        timers: TimerValues): Iterator[ConversionLabel] = {
-      val wmUs = timers.getCurrentWatermarkInMs * 1000L
-      // kept rows all satisfy us >= wmUs, so NONE of them is resolvable
-      // this call (resolvable means strictly below the watermark) — the
-      // fast-path guard below needs only the stored-obligation check.
-      val kept = incoming.filter(_._2 >= wmUs)
-      // FAST PATH — the claimed O(1)-per-arrival append: the watermark
-      // has not reached the stored earliest obligation (min over held
-      // event times and pending window ends), so no held event can be
-      // ready and no pending view can expire. Append the increment
-      // per-element and tighten the obligation; the full read+rewrite
-      // happens only on drains.
-      if (oblg.exists() && oblg.get() >= wmUs) {
-        if (kept.nonEmpty) {
-          buf.appendList(kept.toArray)
-          setObligation(math.min(oblg.get(), kept.map(_._2).min), timers)
-        }
-        return Iterator.empty
-      }
-      val held = if (buf.exists()) buf.get().toList else Nil
-      val pend = if (pending.exists()) pending.get().toList else Nil
-      val (ready, hold) = (held ++ kept).partition(_._2 < wmUs)
-      val (pendingNext, labels) =
-        Streams.resolveConversions(uid, pend, ready, Some(wmUs), windowUs)
-      if (hold.isEmpty) buf.clear() else buf.put(hold.toArray)
-      if (pendingNext.isEmpty) pending.clear() else pending.put(pendingNext.toArray)
-      if (hold.nonEmpty || pendingNext.nonEmpty) {
-        setObligation((hold.map(_._2) ++
-          pendingNext.map { case (_, vus) => vus + windowUs }).min, timers)
-      } else oblg.clear()
-      labels.iterator
-    }
-
-    override def handleInputRows(uid: Long,
-        rows: Iterator[(Long, Long, Long, String, java.sql.Timestamp)],
-        timers: TimerValues): Iterator[ConversionLabel] =
-      resolve(uid, rows.map(r => (r._1, r._3, r._4)).toList, timers)
-
-    override def handleExpiredTimer(uid: Long, timers: TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[ConversionLabel] =
-      resolve(uid, Nil, timers)
   }
 
   /** Watermarked STREAM-STREAM interval join — the streaming twin of

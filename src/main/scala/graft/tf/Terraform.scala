@@ -17,9 +17,10 @@ import scala.jdk.CollectionConverters._
   * published Terraform tables as DataFrames / temp views.
   *
   * Scale design (north star: 100 TB corpora on a 1000-executor cluster):
-  *   - one batch reader: [[rows]] is a read of the DataSource V2 `terraform`
+  *   - one reader: [[rows]] is a read of the DataSource V2 `terraform`
   *     connector (graft.sources.TerraformTableProvider), the same reader
-  *     `spark.read.format("terraform")` and the catalog use;
+  *     `spark.read.format("terraform")` and the catalog use, and the
+  *     file watch [[streamRows]] is a stream of it;
   *   - discovery lists each source once on the driver; executors open and
   *     parse the files, so nothing file-sized ever sits on the driver;
   *   - the parse emits the superset TfRow — one pass serves all seven
@@ -310,43 +311,19 @@ object Terraform {
 
   /** Streaming twin of [[rows]] — the real analog of the reference's
     * file-watch re-query (`steampipe:"watch"` tags, connection_config.go:
-    * 8-11 / SURVEY A21): new or updated files under the watched globs are
-    * parsed incrementally as they appear. Same row schema as batch, so
-    * downstream table projections apply unchanged. */
-  def streamRows(spark: SparkSession, paths0: Paths): Dataset[TfRow] = {
-    import spark.implicits._
-    import org.apache.spark.sql.types._
-    val paths = paths0.orDefaults
-    val binSchema = StructType(Seq(
-      StructField("path", StringType), StructField("modificationTime", TimestampType),
-      StructField("length", LongType), StructField("content", BinaryType)))
-
-    // one stream per glob, unioned — readStream.load takes a single path,
-    // so multi-glob configs mirror the batch read() via unionAll (the
-    // reference watches every configured path; see connection_config.go:
-    // 8-11). Exact duplicate globs dedupe; OVERLAPPING globs (two distinct
-    // patterns matching one file) emit that file's rows once per stream —
-    // batch dedups matched paths, streams cannot without per-file state,
-    // so configure disjoint globs for watch paths.
-    def read(globs: Seq[String], kind: String): Option[Dataset[TfRow]] =
-      Sources.resolve(globs).distinct.map { g =>
-        spark.readStream.format("binaryFile").schema(binSchema).load(g)
-          .select(col("path"), col("content"))
-          .as[(String, Array[Byte])]
-          .flatMap { case (path, bytes) =>
-            val p = stripScheme(path)
-            val k = if (path.endsWith(".tfstate")) FileKind.State else kind
-            Builders.rowsForFile(p, k, new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-          }
-      }.reduceOption(_ unionAll _)
-
-    val streams = Seq(
-      read(paths.configurationFilePaths ++ paths.paths, FileKind.Config),
-      read(paths.planFilePaths, FileKind.Plan),
-      read(paths.stateFilePaths, FileKind.State)).flatten
-    streams.reduceOption(_ unionAll _)
-      .getOrElse(throw new IllegalArgumentException("no watch paths configured"))
-  }
+    * 8-11 / SURVEY A21): a `readStream` of the same connector table, so
+    * the stream follows the batch source rules. Each trigger lists the
+    * sources once; a bare directory contributes nothing; a file two globs
+    * of one list match gives its rows once; a new file, or one rewritten
+    * since the last trigger, emits its rows (see the connector's
+    * `toMicroBatchStream`). Same row schema as batch, so the table
+    * projections apply unchanged. */
+  def streamRows(spark: SparkSession, paths: Paths): Dataset[TfRow] =
+    spark.readStream.format("terraform")
+      .option("table", graft.sources.TerraformTableProvider.RowsTable)
+      .options(sourceOptions(paths))
+      .load()
+      .as[TfRow](rowEncoder)
 
   /** Spark 4 Variant helper views (SURVEY §1.2): each table re-published as
     * `<name>_v` with JSON-typed columns parsed to VARIANT, so users query
@@ -602,7 +579,8 @@ object Terraform {
     * Superseded rows are left to the ContextCleaner: a DataFrame built
     * before the refresh keeps reading its snapshot, carried rows and all.
     * Under reliable persist they are unpersisted, and such a DataFrame
-    * reads the files again. (The continuous analog is [[streamRows]].) */
+    * reads the files again. (The continuous analog is [[streamRows]], a
+    * stream of the same connector.) */
   def refresh(spark: SparkSession): Dataset[TfRow] = ensureLock.synchronized {
     val prev = registrations.get(spark)
     require(prev != null, "Terraform.refresh: no prior Terraform.register for this session")

@@ -98,91 +98,31 @@ class StreamsSpec extends SparkSpecBase {
     assert(rows.map(_._3).toSeq == Seq(false, true, false), "only the spike flags")
   }
 
-  test("streaming conversion labels: resolved set equals the batch query's window labels") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val raw = graft.Engine.table(spark, "/root/testdata/sf0.001", "events")
-    val evs = raw.withColumn("us", graft.queries.Events.usFor(raw))
-      .select("event_id", "user_id", "us", "event_type")
-      .as[(Long, Long, Long, String)].collect().sortBy(_._3)
-    // flush: one far-future non-purchase per user pushes every frontier
-    // past any pending view's window
-    val maxUs = evs.map(_._3).max
-    val flush = evs.map(_._2).distinct.zipWithIndex.map { case (u, i) =>
-      (1000000L + i, u, maxUs + 3600000001L, "click") }
-    val (b1, b2) = evs.splitAt(evs.length / 2)
-    val in = MemoryStream[(Long, Long, Long, String)]
-    val q = Streams.conversionLabels(in.toDS())
-      .writeStream.format("memory").queryName("conv_out")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      in.addData(b1.toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(b2.toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(flush.toIndexedSeq: _*); q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("conv_out").collect()
-      .map(r => r.getLong(0) -> (Option(r.getAs[Any]("purchase_id"))
-        .map(_.asInstanceOf[Long]), r.getAs[Boolean]("converted"))).toMap
-    // the batch query's labels, window-restricted (the stream resolves
-    // within the 1h window; a first-later-purchase beyond it is the
-    // batch's converted=false with the id outside the stream's contract)
-    val batch = graft.queries.Events.queries("x_events_conversion")(
-      spark, "/root/testdata/sf0.001").collect()
-      .map { r =>
-        val conv = r.getBoolean(5)
-        r.getLong(0) -> (if (conv) Some(r.getLong(4)) else None, conv)
-      }.toMap
-    assert(got.keySet == batch.keySet, "every view resolved after the flush")
-    got.foreach { case (vid, lab) =>
-      assert(lab == batch(vid), s"view $vid: stream $lab vs batch ${batch(vid)}")
-    }
-    assert(got.values.exists(_._2) && got.values.exists(!_._2), "both labels occur")
-  }
-
-  test("conversion labels: cross-batch disorder diverges frontier variant, watermarked variant holds") {
+  test("watermarked conversion labels: a view delivered after a later purchase still converts") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val H = 3600000000L // 1h in µs
     // user 1: view v1 @2h and purchase p1 @2h10 arrive in batch 1;
     // view v2 @2h05 (BEFORE the purchase in event time) arrives in
     // batch 2 — within the 1h allowed lateness. Batch semantics: both
-    // views convert via p1. The frontier-only variant has already
-    // consumed p1 when v2 arrives, so it mislabels v2 not-converted —
-    // the documented ordered-arrival precondition.
+    // views convert via p1, so resolution must wait for the watermark
+    // rather than consume p1 when it arrives.
     val b1 = Seq((10L, 1L, 2L * H, "view"), (11L, 1L, 2L * H + 600000000L, "purchase"))
     val b2 = Seq((12L, 1L, 2L * H + 300000000L, "view"))
     val flush = Seq((99L, 1L, 10L * H, "click"))
-    def run(name: String,
-        f: org.apache.spark.sql.Dataset[(Long, Long, Long, String)] =>
-          org.apache.spark.sql.Dataset[Streams.ConversionLabel]): Map[Long, (Option[Long], Boolean)] = {
-      val in = MemoryStream[(Long, Long, Long, String)]
-      val q = f(in.toDS()).writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        in.addData(b1: _*); q.processAllAvailable()
-        in.addData(b2: _*); q.processAllAvailable()
-        in.addData(flush: _*); q.processAllAvailable()
-      } finally q.stop()
-      spark.table(name).collect().map(r => r.getLong(0) ->
-        (Option(r.getAs[Any]("purchase_id")).map(_.asInstanceOf[Long]),
-          r.getAs[Boolean]("converted"))).toMap
-    }
-    val frontier = run("conv_frontier", ds => Streams.conversionLabels(ds))
-    val buffered = run("conv_wm", ds => Streams.conversionLabelsWatermarked(ds))
-    // transformWithState keeps each ListState in its own column family —
-    // only the RocksDB provider supports that (scoped to this query)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val tws =
-      try run("conv_tws", ds => Streams.conversionLabelsTws(ds))
-      finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    assert(frontier(10L) == (Some(11L), true))
-    assert(frontier(12L) == (None, false), "frontier variant mislabels the late view (pinned)")
+    val in = MemoryStream[(Long, Long, Long, String)]
+    val q = Streams.conversionLabelsWatermarked(in.toDS()).writeStream.format("memory")
+      .queryName("conv_wm").outputMode(OutputMode.Append()).start()
+    try {
+      in.addData(b1: _*); q.processAllAvailable()
+      in.addData(b2: _*); q.processAllAvailable()
+      in.addData(flush: _*); q.processAllAvailable()
+    } finally q.stop()
+    val buffered = spark.table("conv_wm").collect().map(r => r.getLong(0) ->
+      (Option(r.getAs[Any]("purchase_id")).map(_.asInstanceOf[Long]),
+        r.getAs[Boolean]("converted"))).toMap
     assert(buffered(10L) == (Some(11L), true))
     assert(buffered(12L) == (Some(11L), true), "watermark buffer restores event-time order")
-    // the transformWithState re-expression must be semantics-identical
-    // to the flatMapGroupsWithState watermark-buffered variant
-    assert(tws == buffered, s"tws $tws vs fMGWS $buffered")
   }
 
   test("watermarked conversion labels equal the batch query under within-batch disorder, no flush per user") {
@@ -325,7 +265,7 @@ class StreamsSpec extends SparkSpecBase {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long, Long, String)]
-    val q = Streams.asofMatches(in.toDS()).writeStream.format("memory")
+    val q = Streams.asofMatchesWatermarked(in.toDS()).writeStream.format("memory")
       .queryName("asof_out").outputMode(OutputMode.Append()).start()
     try {
       // batch 1: user 1 views at 10 then buys at 20; equal-ts view (20)
@@ -335,6 +275,10 @@ class StreamsSpec extends SparkSpecBase {
       // batch 2: a later purchase matches state carried across batches;
       // user 2 buys with no view ever -> null match
       in.addData((103L, 1L, 30L, "purchase"), (104L, 2L, 30L, "purchase"))
+      q.processAllAvailable()
+      // a far-future view of an unrelated user moves the watermark past
+      // every buffered event, so all of them resolve
+      in.addData((999L, 9L, 10L * 3600000000L, "view"))
       q.processAllAvailable()
     } finally q.stop()
     val rows = spark.table("asof_out").collect()
@@ -349,7 +293,7 @@ class StreamsSpec extends SparkSpecBase {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Long, Long, String)]
-    val q = Streams.asofMatches(in.toDS()).writeStream.format("memory")
+    val q = Streams.asofMatchesWatermarked(in.toDS()).writeStream.format("memory")
       .queryName("asof_edge_out").outputMode(OutputMode.Append()).start()
     try {
       // user 1: view id=101 at us=20 lands first
@@ -367,6 +311,10 @@ class StreamsSpec extends SparkSpecBase {
       q.processAllAvailable()
       in.addData((210L, 2L, 30L, "purchase"))
       q.processAllAvailable()
+      // a far-future view of an unrelated user moves the watermark past
+      // every buffered event, so all of them resolve
+      in.addData((999L, 9L, 10L * 3600000000L, "view"))
+      q.processAllAvailable()
     } finally q.stop()
     val rows = spark.table("asof_edge_out").collect()
       .map(r => r.getAs[Long]("purchase_id") ->
@@ -376,49 +324,34 @@ class StreamsSpec extends SparkSpecBase {
     assert(rows(210L) == (None, None), s"purchase matched a FUTURE view: $rows")
   }
 
-  test("as-of: cross-batch disorder diverges the frontier variant; watermarked and tws hold") {
+  test("watermarked as-of: a view delivered after a later purchase is still its match") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val H = 3600000000L // 1h in µs
     // user 1: view v10 @2h and purchase p11 @2h10 arrive in batch 1;
     // view v12 @2h05 (BEFORE the purchase in event time) arrives in
     // batch 2, within the 1h allowed lateness. Batch semantics: the
-    // purchase matches v12 (latest view at-or-before). The frontier
-    // variant has already matched p11 → v10 when v12 arrives — the
-    // documented ordered-arrival precondition, pinned here.
+    // purchase matches v12 (latest view at-or-before), so resolution
+    // must wait for the watermark rather than match p11 on arrival.
     val b1 = Seq((10L, 1L, 2L * H, "view"), (11L, 1L, 2L * H + 600000000L, "purchase"))
     val b2 = Seq((12L, 1L, 2L * H + 300000000L, "view"))
     // the as-of frontier derives from view/purchase traffic only (the
     // type filter sits below the watermark), so the flush is a VIEW for
     // an unrelated user — it advances the watermark and emits nothing
     val flush = Seq((99L, 9L, 10L * H, "view"))
-    def run(name: String,
-        f: org.apache.spark.sql.Dataset[(Long, Long, Long, String)] =>
-          org.apache.spark.sql.Dataset[Streams.AsOfMatch]): Map[Long, (Option[Long], Option[Long])] = {
-      val in = MemoryStream[(Long, Long, Long, String)]
-      val q = f(in.toDS()).writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        in.addData(b1: _*); q.processAllAvailable()
-        in.addData(b2: _*); q.processAllAvailable()
-        in.addData(flush: _*); q.processAllAvailable()
-      } finally q.stop()
-      spark.table(name).collect().map(r => r.getLong(0) ->
-        (Option(r.getAs[Any]("view_id")).map(_.asInstanceOf[Long]),
-          Option(r.getAs[Any]("v_us")).map(_.asInstanceOf[Long]))).toMap
-    }
-    val frontier = run("asof_frontier", ds => Streams.asofMatches(ds))
-    val buffered = run("asof_wm", ds => Streams.asofMatchesWatermarked(ds))
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val tws =
-      try run("asof_tws", ds => Streams.asofMatchesTws(ds))
-      finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    assert(frontier(11L) == (Some(10L), Some(2L * H)),
-      "frontier variant matches the already-seen view (pinned divergence)")
+    val in = MemoryStream[(Long, Long, Long, String)]
+    val q = Streams.asofMatchesWatermarked(in.toDS()).writeStream.format("memory")
+      .queryName("asof_wm").outputMode(OutputMode.Append()).start()
+    try {
+      in.addData(b1: _*); q.processAllAvailable()
+      in.addData(b2: _*); q.processAllAvailable()
+      in.addData(flush: _*); q.processAllAvailable()
+    } finally q.stop()
+    val buffered = spark.table("asof_wm").collect().map(r => r.getLong(0) ->
+      (Option(r.getAs[Any]("view_id")).map(_.asInstanceOf[Long]),
+        Option(r.getAs[Any]("v_us")).map(_.asInstanceOf[Long]))).toMap
     assert(buffered(11L) == (Some(12L), Some(2L * H + 300000000L)),
       s"watermark buffer restores event-time order: $buffered")
-    assert(tws == buffered, s"tws $tws vs fMGWS $buffered")
   }
 
   test("watermarked as-of equals the batch query under cross-batch disorder, one global flush") {

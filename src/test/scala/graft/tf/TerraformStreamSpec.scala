@@ -10,7 +10,7 @@ class TerraformStreamSpec extends SparkSpecBase {
     val watchDir = Files.createTempDirectory("tfwatch").toFile
     watchDir.deleteOnExit()
     val stream = Terraform.streamRows(spark,
-      Terraform.Paths(configurationFilePaths = Seq(watchDir.getAbsolutePath)))
+      Terraform.Paths(configurationFilePaths = Seq(s"${watchDir.getAbsolutePath}/*.tf")))
     val q = stream.toDF().writeStream.format("memory")
       .queryName("tf_watch").outputMode("append").start()
     try {
@@ -36,7 +36,7 @@ class TerraformStreamSpec extends SparkSpecBase {
     val dirB = Files.createTempDirectory("tfwatchB").toFile
     dirA.deleteOnExit(); dirB.deleteOnExit()
     val stream = Terraform.streamRows(spark, Terraform.Paths(
-      configurationFilePaths = Seq(dirA.getAbsolutePath, dirB.getAbsolutePath)))
+      configurationFilePaths = Seq(s"${dirA.getAbsolutePath}/*.tf", s"${dirB.getAbsolutePath}/*.tf")))
     val q = stream.toDF().writeStream.format("memory")
       .queryName("tf_watch_multi").outputMode("append").start()
     try {
@@ -51,6 +51,36 @@ class TerraformStreamSpec extends SparkSpecBase {
       assert(t.filter(col("table") === "resource").count() >= 3, "dirA rows missing")
       assert(t.filter(col("table") === "module").count() >= 1, "dirB rows missing")
     } finally q.stop()
+  }
+
+  test("file-watch stream follows the batch source rules: same rows as Terraform.rows and register") {
+    val dir = Files.createTempDirectory("tfparity")
+    dir.toFile.deleteOnExit()
+    Seq("main.tf", "second.tf", "terraform.tfstate", "tfplan.json").foreach { f =>
+      Files.copy(JPaths.get("fixtures", f), dir.resolve(f), StandardCopyOption.REPLACE_EXISTING)
+    }
+    val paths = Terraform.Paths(
+      // a bare directory contributes nothing; `*.tf` and `main.*` both
+      // match main.tf; a `.tfstate` match is parsed as state whatever
+      // list names it
+      configurationFilePaths = Seq(dir.toString, s"$dir/*.tf", s"$dir/main.*", s"$dir/*.tfstate"),
+      planFilePaths = Seq(s"$dir/tfplan.json"))
+    val q = Terraform.streamRows(spark, paths).toDF().writeStream.format("memory")
+      .queryName("tf_watch_parity").outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+
+    import spark.implicits._
+    def byTablePath(rows: Seq[TfRow]): Map[(String, String), Map[TfRow, Int]] =
+      rows.groupBy(r => (r.table, r.path)).view
+        .mapValues(_.groupBy(identity).view.mapValues(_.size).toMap).toMap
+    val streamed = byTablePath(spark.table("tf_watch_parity").as[TfRow].collect().toSeq)
+    val batch = byTablePath(Terraform.rows(spark, paths).collect().toSeq)
+    assert(batch.keySet.map(_._1).contains("resource") && batch.keySet.exists(_._2.endsWith(".tfstate")))
+    val differing = (streamed.keySet ++ batch.keySet).toSeq.sorted
+      .filter(k => streamed.get(k) != batch.get(k))
+      .map(k => k -> (streamed.get(k).fold(0)(_.values.sum), batch.get(k).fold(0)(_.values.sum)))
+    assert(differing.isEmpty, s"(table, path) -> (stream rows, batch rows): $differing")
+    assert(byTablePath(Terraform.register(spark, paths).collect().toSeq) == batch)
   }
 
   test("discovery tolerates missing sources and skips bare directories (A1)") {
