@@ -174,21 +174,21 @@ object Engine {
 
   /** [[materialize]] for an RDD, under the same policy: locally
     * checkpointed by default, persisted with its lineage under
-    * `SPARK_GRAFT_RELIABLE_PERSIST=1`; either way computed once, here.
-    * The job is run directly, not through `count()`, whose closures
-    * Spark's ClosureCleaner finds in RDD and SparkContext, classes of
-    * ~200 KB it reads on every call. */
-  def materialize[T](rdd: RDD[T]): RDD[T] = {
+    * `SPARK_GRAFT_RELIABLE_PERSIST=1`; either way computed once, here, by
+    * one job that returns `summary` of each partition's stored values.
+    * Neither needs a release: only `Dataset.persist` is held by the
+    * CacheManager until unpersisted, while `RDD.persist` registers the
+    * RDD with the ContextCleaner, which drops its blocks once the RDD is
+    * unreachable, as it does a local checkpoint's. The job is run
+    * directly, not through `count()`, whose closures Spark's
+    * ClosureCleaner finds in RDD and SparkContext, classes of ~200 KB it
+    * reads on every call: the closure it cleans is `summary`. */
+  def materialize[T, U: scala.reflect.ClassTag](rdd: RDD[T],
+      summary: (org.apache.spark.TaskContext, Iterator[T]) => U): Array[U] = {
     if (reliablePersist) rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else rdd.localCheckpoint()
-    rdd.sparkContext.runJob(rdd, (_: org.apache.spark.TaskContext, it: Iterator[T]) => it.foreach(_ => ()),
-      rdd.partitions.indices)
-    rdd
+    rdd.sparkContext.runJob(rdd, summary, rdd.partitions.indices)
   }
-
-  /** [[release]] for an RDD obtained from [[materialize]]. */
-  def release(rdd: RDD[_]): Unit =
-    if (reliablePersist) { rdd.unpersist(blocking = false); () }
 
   private def reliablePersist: Boolean =
     sys.env.get("SPARK_GRAFT_RELIABLE_PERSIST").contains("1")

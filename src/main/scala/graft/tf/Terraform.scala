@@ -2,7 +2,8 @@ package graft.tf
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
@@ -32,10 +33,13 @@ import scala.jdk.CollectionConverters._
   *     splits (see there for why);
   *   - [[refresh]] re-parses only the files that changed since the last
   *     listing and carries every other row over;
-  *   - each table is filter + projection over the registered rows; on
-  *     an uncached read the connector takes the pruned columns (a scan
-  *     that reads no span column skips span recovery) and a `path = '…'`
-  *     qual, which drops non-matching files before any is opened (A2);
+  *   - the registered rows are stored as chunks of one table's rows, and
+  *     each published view is a projection of its table's chunks alone,
+  *     read in tasks sized by its row bytes ([[publish]]); the public
+  *     builders ([[resource]] …) filter and project any rows, and on an
+  *     uncached read the connector takes the pruned columns (a scan that
+  *     reads no span column skips span recovery) and a `path = '…'` qual,
+  *     which drops non-matching files before any is opened (A2);
   *   - everything downstream of the parse stays in whole-stage codegen.
   */
 object Terraform {
@@ -342,71 +346,72 @@ object Terraform {
       val projected = df.columns.map { c =>
         if (cols.contains(c)) expr(s"try_parse_json($c)").as(c) else col(c)
       }
-      df.select(projected.toIndexedSeq: _*).createOrReplaceTempView(s"${view}_v")
+      org.apache.spark.sql.GraftViews.install(spark, s"${view}_v",
+        df.select(projected.toIndexedSeq: _*).queryExecution.analyzed)
     }
   }
 
-  // ---- the seven published tables (column order = reference declaration),
-  // each a filter and a projection of untyped rows: a filter of a typed
-  // Dataset binds its encoder again
+  /** One published table: its view name, the `table` value of its rows
+    * and its columns (column order = reference declaration), each a row
+    * column or `<row column> <published name>`. */
+  private final case class TableView(name: String, table: String, columnList: String) {
+    private val columns: Seq[(String, String)] = columnList.split(",").toSeq.map(_.trim.split(" ")).map {
+      case Array(c) => (c, c)
+      case Array(c, as) => (c, as)
+    }
 
-  def resource(rows: Dataset[_]): DataFrame =
-    rows.toDF().filter(col("table") === "resource").select(
-      col("name"), col("tfType").as("type"), col("mode"), col("address"),
-      col("arguments"), col("attributes"), col("attributesStd").as("attributes_std"),
-      col("count"), col("countSrc").as("count_src"), col("forEach").as("for_each"),
-      col("dependsOn").as("depends_on"), col("lifecycle"), col("provider"),
-      col("startLine").as("start_line"), col("endLine").as("end_line"),
-      col("source"), col("path"))
+    /** The table over any rows: a filter and a projection, of untyped rows
+      * (a filter of a typed Dataset binds its encoder again). */
+    def of(rows: Dataset[_]): DataFrame =
+      rows.toDF().filter(col("table") === table)
+        .select(columns.map { case (c, as) => if (c == as) col(c) else col(c).as(as) }: _*)
 
-  def dataSource(rows: Dataset[_]): DataFrame =
-    rows.toDF().filter(col("table") === "data_source").select(
-      col("name"), col("tfType").as("type"), col("arguments"),
-      col("count"), col("countSrc").as("count_src"), col("forEach").as("for_each"),
-      col("dependsOn").as("depends_on"), col("provider"),
-      col("startLine").as("start_line"), col("endLine").as("end_line"),
-      col("source"), col("path"))
+    /** The table over `rows`, a relation of only this table's rows: the
+      * projection, resolved as the analyzer would resolve [[of]]'s. */
+    def over(rows: LogicalPlan): LogicalPlan = {
+      val byName = rows.output.map(a => a.name -> a).toMap
+      Project(columns.map { case (c, as) => if (c == as) byName(c) else Alias(byName(c), as)() }, rows)
+    }
+  }
 
-  def local(rows: Dataset[_]): DataFrame =
-    rows.toDF().filter(col("table") === "local").select(
-      col("name"), col("value"),
-      col("startLine").as("start_line"), col("endLine").as("end_line"),
-      col("source"), col("path"))
+  private val Resource = TableView("terraform_resource", "resource",
+    "name, tfType type, mode, address, arguments, attributes, attributesStd attributes_std, count, " +
+      "countSrc count_src, forEach for_each, dependsOn depends_on, lifecycle, provider, " +
+      "startLine start_line, endLine end_line, source, path")
+  private val DataSource = TableView("terraform_data_source", "data_source",
+    "name, tfType type, arguments, count, countSrc count_src, forEach for_each, dependsOn depends_on, " +
+      "provider, startLine start_line, endLine end_line, source, path")
+  private val Local = TableView("terraform_local", "local",
+    "name, value, startLine start_line, endLine end_line, source, path")
+  private val Module = TableView("terraform_module", "module",
+    "name, moduleSource module_source, version, arguments, count, countSrc count_src, forEach for_each, " +
+      "dependsOn depends_on, provider, startLine start_line, endLine end_line, source, path")
+  private val Output = TableView("terraform_output", "output",
+    "name, value, description, sensitive, dependsOn depends_on, startLine start_line, endLine end_line, " +
+      "source, path")
+  private val Provider = TableView("terraform_provider", "provider",
+    "name, arguments, alias, version, startLine start_line, endLine end_line, source, path")
+  private val Variable = TableView("terraform_variable", "variable",
+    "name, tfType type, defaultValue default_value, description, sensitive, startLine start_line, " +
+      "validation, endLine end_line, source, path")
+  private val Diagnostics = TableView("terraform_diagnostics", "_error", "path, description error")
 
-  def module(rows: Dataset[_]): DataFrame =
-    rows.toDF().filter(col("table") === "module").select(
-      col("name"), col("moduleSource").as("module_source"), col("version"),
-      col("arguments"), col("count"), col("countSrc").as("count_src"),
-      col("forEach").as("for_each"), col("dependsOn").as("depends_on"),
-      col("provider"),
-      col("startLine").as("start_line"), col("endLine").as("end_line"),
-      col("source"), col("path"))
+  private val tableViews: Seq[TableView] =
+    Seq(Resource, DataSource, Local, Module, Output, Provider, Variable, Diagnostics)
 
-  def output(rows: Dataset[_]): DataFrame =
-    rows.toDF().filter(col("table") === "output").select(
-      col("name"), col("value"), col("description"), col("sensitive"),
-      col("dependsOn").as("depends_on"),
-      col("startLine").as("start_line"), col("endLine").as("end_line"),
-      col("source"), col("path"))
+  // ---- the seven published tables over any rows
 
-  def provider(rows: Dataset[_]): DataFrame =
-    rows.toDF().filter(col("table") === "provider").select(
-      col("name"), col("arguments"), col("alias"), col("version"),
-      col("startLine").as("start_line"), col("endLine").as("end_line"),
-      col("source"), col("path"))
-
-  def variable(rows: Dataset[_]): DataFrame =
-    rows.toDF().filter(col("table") === "variable").select(
-      col("name"), col("tfType").as("type"), col("defaultValue").as("default_value"),
-      col("description"), col("sensitive"),
-      col("startLine").as("start_line"), col("validation"),
-      col("endLine").as("end_line"), col("source"), col("path"))
+  def resource(rows: Dataset[_]): DataFrame = Resource.of(rows)
+  def dataSource(rows: Dataset[_]): DataFrame = DataSource.of(rows)
+  def local(rows: Dataset[_]): DataFrame = Local.of(rows)
+  def module(rows: Dataset[_]): DataFrame = Module.of(rows)
+  def output(rows: Dataset[_]): DataFrame = Output.of(rows)
+  def provider(rows: Dataset[_]): DataFrame = Provider.of(rows)
+  def variable(rows: Dataset[_]): DataFrame = Variable.of(rows)
 
   /** Parse-failure channel: one row per unreadable file (the reference
     * aborts the whole scan on parse errors; we surface them queryably). */
-  def diagnostics(rows: Dataset[_]): DataFrame =
-    rows.toDF().filter(col("table") === "_error")
-      .select(col("path"), col("description").as("error"))
+  def diagnostics(rows: Dataset[_]): DataFrame = Diagnostics.of(rows)
 
   /** One listed file: its listing path, kind, length and modification
     * time in ms. */
@@ -444,18 +449,21 @@ object Terraform {
     read(spark, Map(graft.sources.TerraformTableProvider.ListedFilesOption ->
       graft.sources.TerraformTableProvider.renderListed(files.map(f => (f.path, f.kind, f.len)))))
 
-  /** The stored partitions behind registered rows: a few arrays of rows
-    * each ([[RowChunks]]), read through a [[ChunkedRows]] relation. They
+  /** The stored partitions behind registered rows: chunks of about
+    * `RowChunks.ChunkBytes` of one table's rows each ([[RowChunks.chunked]]),
+    * read through [[ChunkedRows]] relations, all chunks by the registered
+    * rows and only its table's by each published view ([[publish]]). They
     * are kept through graft.Engine.materialize: by default lineage-free
     * (`localCheckpoint`), so no later plan over them reaches the files or
-    * an earlier generation, and the ContextCleaner drops the blocks once
-    * nothing references them. The blocks live unreplicated on the
+    * an earlier generation. The blocks live unreplicated on the
     * executors, the single-process trade `Engine.materialize` documents: a
     * lost executor loses them for good, and [[refresh]] or
     * [[ensureRegistered]] then re-parse from scratch (see [[intact]]).
     * Under `SPARK_GRAFT_RELIABLE_PERSIST=1` they are persisted with
-    * lineage to the files instead, and a lost block is recomputed. */
-  private[tf] def blocks(rows: Dataset[_]): Option[RDD[Array[UnsafeRow]]] =
+    * lineage to the files instead, and a lost block is recomputed. Either
+    * way the ContextCleaner drops them once no registration, view or
+    * DataFrame references them. */
+  private[tf] def blocks(rows: Dataset[_]): Option[RDD[Chunk]] =
     rows.queryExecution.logical.collectFirst { case l: LogicalRDD => l.rdd }
       .collect { case c: ChunkedRows => c.stored }
 
@@ -465,15 +473,20 @@ object Terraform {
   private def intact(rows: Dataset[_]): Boolean =
     blocks(rows).forall(s => !s.isCheckpointed || org.apache.spark.GraftBlocks.allPresent(s))
 
-  /** Release the stored partitions behind `rows` (graft.Engine.release). */
-  private def release(rows: Dataset[_]): Unit = blocks(rows).foreach(graft.Engine.release)
-
-  /** Keep `rows`, stand-alone UnsafeRows of `schema`, as a relation: stored
-    * in chunks ([[blocks]]) and sized at `bytes`, the listing's bytes, so
-    * joins over the views still broadcast. */
-  private def store(spark: SparkSession, rows: RDD[UnsafeRow], schema: StructType, bytes: Long): DataFrame =
-    org.apache.spark.sql.GraftRows.of(spark,
-      new ChunkedRows(graft.Engine.materialize(RowChunks.chunked(rows))), schema, bytes)
+  /** Keep `rows`, stand-alone UnsafeRows of `schema`, as the registration
+    * of `paths` at `listing`: stored in chunks ([[blocks]]) by one job,
+    * which also counts each table's row bytes, the sizes of the views'
+    * read tasks. The registered rows read every chunk and are sized at the
+    * listing's bytes, so joins over the views still broadcast. */
+  private def store(spark: SparkSession, paths: Paths, listing: Listing, rows: RDD[UnsafeRow],
+      schema: StructType): Registration = {
+    val stored = RowChunks.chunked(rows, schema.fieldIndex("table"))
+    val tableBytes = graft.Engine.materialize(stored, RowChunks.tableBytes)
+      .iterator.flatten.toSeq.groupMapReduce(_._1)(_._2)(_ + _)
+    val all = new ChunkedRows(stored, None, tableBytes.values.sum,
+      spark.sessionState.conf.filesMaxPartitionBytes)
+    Registration(paths, listing, org.apache.spark.sql.GraftRows.of(spark, all, schema, listing.bytes), tableBytes)
+  }
 
   /** Register all seven tables as temp views (+ the function shims) over
     * one parse of the configured corpus — the analog of the reference
@@ -487,43 +500,44 @@ object Terraform {
     * them. Published `<name>_v` views ([[registerVariantViews]]) are
     * re-published over the new rows. */
   def register(spark: SparkSession, paths: Paths): Dataset[TfRow] = ensureLock.synchronized {
-    val prev = Option(registrations.get(spark))
-    val r = parseAll(spark, paths, list(spark, paths))
-    // reliable persist only: the stored partitions stay persisted until
-    // released, and a DataFrame built on them re-reads the files
-    prev.foreach(p => release(p.rows))
-    r
+    parseAll(spark, paths, list(spark, paths))
   }
 
   /** Parse every listed file and make the result the session's registration. */
   private def parseAll(spark: SparkSession, paths: Paths, listing: Listing): Dataset[TfRow] = {
     val parsed = parse(spark, listing.files)
-    publish(spark, Registration(paths, listing, store(spark,
-      RowChunks.copies(parsed.queryExecution.toRdd, parsed.schema), parsed.schema, listing.bytes)))
+    publish(spark, store(spark, paths, listing,
+      RowChunks.copies(parsed.queryExecution.toRdd, parsed.schema), parsed.schema))
   }
 
-  /** A session's registered configuration, its listing and its rows. */
-  private final case class Registration(paths: Paths, listing: Listing, rows: DataFrame) {
+  /** A session's registered configuration, its listing, its rows and the
+    * row bytes of each table. */
+  private final case class Registration(paths: Paths, listing: Listing, rows: DataFrame,
+      tableBytes: Map[String, Long]) {
     /** The rows as returned: typed once per registration. */
     lazy val typed: Dataset[TfRow] = rows.as[TfRow](rowEncoder)
   }
 
   private val registrations = new java.util.concurrent.ConcurrentHashMap[SparkSession, Registration]()
 
-  /** Make `reg` the session's registration and point the views at its rows. */
+  /** Make `reg` the session's registration and point the views at its rows.
+    * Each view is a projection of a slice of the stored rows, a
+    * [[ChunkedRows]] of its table's chunks in tasks sized by its row bytes,
+    * built resolved and installed in the session catalog: no filter over
+    * every row, no analyzer run and no view command (whose SQL execution
+    * plans the command to render its plan string). */
   private def publish(spark: SparkSession, reg: Registration): Dataset[TfRow] = {
     registrations.keySet.removeIf(s => s.sparkContext.isStopped) // drop dead sessions
     val hadVariantViews = spark.sessionState.catalog.getTempView("terraform_resource_v").isDefined
     registrations.put(spark, reg)
-    val r = reg.rows
-    resource(r).createOrReplaceTempView("terraform_resource")
-    dataSource(r).createOrReplaceTempView("terraform_data_source")
-    local(r).createOrReplaceTempView("terraform_local")
-    module(r).createOrReplaceTempView("terraform_module")
-    output(r).createOrReplaceTempView("terraform_output")
-    provider(r).createOrReplaceTempView("terraform_provider")
-    variable(r).createOrReplaceTempView("terraform_variable")
-    diagnostics(r).createOrReplaceTempView("terraform_diagnostics")
+    val stored = blocks(reg.rows).get
+    val schema = reg.rows.schema
+    val split = spark.sessionState.conf.filesMaxPartitionBytes
+    tableViews.foreach { v =>
+      val slice = new ChunkedRows(stored, Some(v.table), reg.tableBytes.getOrElse(v.table, 0L), split)
+      org.apache.spark.sql.GraftViews.install(spark, v.name,
+        v.over(org.apache.spark.sql.GraftRows.plan(spark, slice, schema, reg.listing.bytes)))
+    }
     // a `_v` view holds the analyzed plan of the rows it was built over
     if (hadVariantViews) registerVariantViews(spark)
     registerFunctions(spark)
@@ -576,10 +590,9 @@ object Terraform {
     * `SPARK_GRAFT_RELIABLE_PERSIST=1`, where each generation keeps its
     * lineage to the files rather than to the generation before it.
     *
-    * Superseded rows are left to the ContextCleaner: a DataFrame built
-    * before the refresh keeps reading its snapshot, carried rows and all.
-    * Under reliable persist they are unpersisted, and such a DataFrame
-    * reads the files again. (The continuous analog is [[streamRows]], a
+    * Superseded rows are left to the ContextCleaner, stored either way: a
+    * DataFrame built before the refresh keeps reading its snapshot,
+    * carried rows and all. (The continuous analog is [[streamRows]], a
     * stream of the same connector.) */
   def refresh(spark: SparkSession): Dataset[TfRow] = ensureLock.synchronized {
     val prev = registrations.get(spark)
@@ -592,17 +605,14 @@ object Terraform {
     if (!lost && stale.isEmpty && parsed.isEmpty) prev.typed
     else blocks(prev.rows).filter(s => !lost && s.isCheckpointed) match {
       case Some(stored) =>
-        publish(spark, Registration(prev.paths, now,
-          carryOver(spark, prev.rows, stored, stale, parsed.toSeq.flatMap(now.byPath), now)))
+        publish(spark, carryOver(spark, prev, stored, stale, parsed.toSeq.flatMap(now.byPath), now))
       case None => // lost, or stored with lineage, which a carry-over would chain
-        val r = parseAll(spark, prev.paths, now)
-        release(prev.rows)
-        r
+        parseAll(spark, prev.paths, now)
     }
   }
 
-  /** The rows of `now`: the previous rows, stored in `stored`, minus the
-    * `stale` paths, plus a parse of the `fresh` files, in
+  /** The registration of `now`: the previous rows, stored in `stored`,
+    * minus the `stale` paths, plus a parse of the `fresh` files, in
     * [[scanPartitions]] partitions of `now`, stored. Each carried
     * partition keeps its rows where they are and takes the fresh rows of
     * one path-hash bucket, so only the fresh rows move and each partition
@@ -610,9 +620,9 @@ object Terraform {
     * every row by path hash ([[RowChunks.merged]]). Carried rows are the
     * previous generation's row objects, not copies. The stale filter is a
     * closure, not a plan: every refresh runs the same classes. */
-  private def carryOver(spark: SparkSession, prev: DataFrame, stored: RDD[Array[UnsafeRow]],
-                        stale: Set[String], fresh: Seq[Listed], now: Listing): DataFrame = {
-    val schema = prev.schema
+  private def carryOver(spark: SparkSession, prev: Registration, stored: RDD[Chunk],
+                        stale: Set[String], fresh: Seq[Listed], now: Listing): Registration = {
+    val schema = prev.rows.schema
     val at = schema.fieldIndex("path")
     val carried = RowChunks.without(stored, stale.map(UTF8String.fromString), at)
     val parsed =
@@ -620,7 +630,7 @@ object Terraform {
       else RowChunks.copies(parse(spark, fresh).queryExecution.toRdd, schema)
     val n = scanPartitions(now.files.size, now.bytes,
       spark.sessionState.conf.filesMaxPartitionBytes, spark.sparkContext.defaultParallelism)
-    store(spark, RowChunks.merged(carried, parsed, at, n), schema, now.bytes)
+    store(spark, prev.paths, now, RowChunks.merged(carried, parsed, at, n), schema)
   }
 
   /** Postgres array-index semantics for `->`/`->>`: a negative integer

@@ -2,7 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
@@ -14,9 +14,12 @@ import org.apache.spark.sql.types.StructType
   * (the default for an RDD is "too large to broadcast"). The GraftColumn
   * pattern. */
 object GraftRows {
-  def of(spark: SparkSession, rows: RDD[InternalRow], schema: StructType, sizeInBytes: BigInt): DataFrame = {
-    val session = spark.asInstanceOf[classic.SparkSession]
-    classic.Dataset.ofRows(session,
-      LogicalRDD(DataTypeUtils.toAttributes(schema), rows)(session, Some(Statistics(sizeInBytes))))
-  }
+  def of(spark: SparkSession, rows: RDD[InternalRow], schema: StructType, sizeInBytes: BigInt): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan(spark, rows, schema, sizeInBytes))
+
+  /** The relation of [[of]] as a resolved plan, with no Dataset (whose
+    * construction runs the analyzer). */
+  def plan(spark: SparkSession, rows: RDD[InternalRow], schema: StructType, sizeInBytes: BigInt): LogicalPlan =
+    LogicalRDD(DataTypeUtils.toAttributes(schema), rows)(
+      spark.asInstanceOf[classic.SparkSession], Some(Statistics(sizeInBytes)))
 }

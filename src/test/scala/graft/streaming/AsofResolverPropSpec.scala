@@ -6,7 +6,7 @@ import org.scalacheck.rng.Seed
 
 /** Property pin for the shared as-of resolver protocol — pure driver-side
   * (no Spark session): the watermark-buffered variants' drain loop,
-  * simulated exactly as `asofMatchesWatermarked` / `AsofProcessor` run it
+  * simulated exactly as `asofMatchesWatermarked`'s state function runs it
   * (filter late rows, buffer at-or-above-watermark rows, drain strictly-
   * below-watermark rows through [[Streams.resolveAsof]]), must produce
   * the SAME matches as a first-principles batch as-of over the full

@@ -253,9 +253,7 @@ class ScanPartitionsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
   }
 
   test("a DataFrame built before a refresh keeps reading its snapshot; the view moves on") {
-    // the snapshot is the stored rows; under reliable persist a refresh
-    // unpersists them and such a DataFrame re-reads the files
-    assume(!sys.env.get("SPARK_GRAFT_RELIABLE_PERSIST").contains("1"))
+    // the snapshot is the stored rows, persisted or checkpointed alike
     val (d, p) = corpus("refresh-snapshot", 8)
     Terraform.register(spark, p)
     def names(df: org.apache.spark.sql.DataFrame) = df.select("name").collect().map(_.getString(0)).toSet

@@ -2,7 +2,7 @@
 """Share of a perfbench run's JFR execution samples per frame pattern, in one phase.
 
     python3 tools/jfr_share.py RECORDING PHASE_LOG [--after warm-up]
-        [--before "timed loop"] [--stack-depth 512] [PATTERN ...]
+        [--before "timed loop"] [--stack-depth 512] [--threads] [PATTERN ...]
 
 RECORDING is a `.jfr` file (printed here with `jfr print --events
 jdk.ExecutionSample --stack-depth N`) or that command's saved output.
@@ -15,7 +15,10 @@ phase: by default the timed loop. Time zero is the first sample taken in
 A PATTERN is `label=regex` or a bare regex; a sample counts for it when any
 frame of its stack matches. Without patterns the Terraform refresh buckets
 below are counted. Each line prints the samples and their share of all the
-samples in the window. The JVM must record deep stacks
+samples in the window. With `--threads` the window's samples are also
+split by the name of the sampled thread, digits collapsed to `N` (all
+`Executor task launch worker-N` threads count as one), with each pattern's
+samples per thread when patterns are given. The JVM must record deep stacks
 (`-XX:FlightRecorderOptions=stackdepth=512`) and `jfr print` must be asked
 for them (`--stack-depth`), or Spark's deep planner stacks lose their
 `graft.` frames.
@@ -38,6 +41,7 @@ DEFAULT_PATTERNS = [
 ]
 
 TIME = re.compile(r"startTime = (\d+):(\d+):(\d+(?:\.\d+)?)")
+THREAD = re.compile(r'sampledThread = "(.*)" \(')
 PHASE = re.compile(r"\[perfbench\] (.+?) done at ([\d.]+) s")
 
 
@@ -65,8 +69,10 @@ def main():
     ap.add_argument("--after", default="warm-up")
     ap.add_argument("--before", default="timed loop")
     ap.add_argument("--stack-depth", type=int, default=512)
+    ap.add_argument("--threads", action="store_true",
+                    help="split the samples by thread name, digits collapsed")
     ap.add_argument("patterns", nargs="*")
-    a = ap.parse_args()
+    a = ap.parse_intermixed_args()
 
     if a.recording.endswith(".jfr"):
         text = subprocess.run(["jfr", "print", "--events", "jdk.ExecutionSample",
@@ -92,6 +98,25 @@ def main():
         r = re.compile(rx)
         k = sum(1 for e in window if r.search(e))
         print(f"{k:7d}  {100.0 * k / max(1, n):5.1f} %  {label}")
+    if a.threads:
+        by_thread = {}
+        for e in window:
+            by_thread.setdefault(thread(e), []).append(e)
+        print("per thread:")
+        for name, es in sorted(by_thread.items(), key=lambda kv: -len(kv[1])):
+            print(f"{len(es):7d}  {100.0 * len(es) / max(1, n):5.1f} %  {name}")
+            if a.patterns:
+                for label, rx in patterns:
+                    r = re.compile(rx)
+                    k = sum(1 for e in es if r.search(e))
+                    if k:
+                        print(f"{k:15d}  {label}")
+
+
+def thread(event):
+    """The sampled thread's name, each run of digits collapsed to N."""
+    m = THREAD.search(event)
+    return re.sub(r"\d+", "N", m.group(1)) if m else "?"
 
 
 if __name__ == "__main__":
