@@ -133,9 +133,32 @@ object Engine {
     spark
   }
 
-  /** Load one driver-generated parquet table from a scale-factor dir. */
+  /** Load one driver-generated parquet table from a scale-factor dir,
+    * `dir/name.parquet`, through the session's table-metadata cache
+    * ([[ParquetMeta]]). What is cached: the schema Spark inferred, and the
+    * footers' exact row count ([[tableRows]]). The key is the path plus the
+    * session confs that change parquet inference (`nanosAsLong`,
+    * `binaryAsString`, `int96AsTimestamp`, `inferTimestampNTZ`,
+    * `mergeSchema`); an entry holds for one fingerprint of the path's data
+    * files, their sorted (path, length, mtime) from one driver-side listing,
+    * so a rewritten table is re-inferred on its next read. A read of an
+    * unchanged table is `spark.read.schema(cached).parquet(path)`: no
+    * schema-inference job. Each call returns a fresh plan with fresh
+    * attribute ids, so a query may read one table twice (a self-join). */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** [[table]] for any parquet path (file or directory), under the same
+    * cache: the index reads of a streaming dedup micro-batch re-infer
+    * nothing while the index is unchanged. */
+  def parquet(spark: SparkSession, path: String): DataFrame = ParquetMeta.read(spark, path)
+
+  /** Exact row count of [[table]]`(spark, dir, name)` for plan-build sizing
+    * probes (LSH banding, IVF cells, PQ centroids, Bloom sizing, the
+    * sessionization spread): the footers' row-group counts, read on the
+    * driver once per fingerprint, so it starts no Spark job. */
+  def tableRows(spark: SparkSession, dir: String, name: String): Long =
+    ParquetMeta.footers(spark, s"$dir/$name.parquet").rows
 
   /** Materialize a bounded multi-consumer relation ONCE, eagerly, so N
     * downstream consumers (including driver-side id collects) never
@@ -480,25 +503,16 @@ object Engine {
       .toDF("n_files", "n_buckets", "files_per_bucket", "max_bucket_files", "compact")
   }
 
-  /** Row count for plan-build sizing probes (LSH banding, ANN planes):
-    * plan statistics when they are EXACT by construction — Range, a
-    * MATERIALIZED cache (whose stats come from its row-count accumulator),
-    * and LocalRelation under test configs — so sizing costs NO job;
-    * otherwise one count() scan (itself metadata-cheap on parquet:
-    * row-group counts, no column IO). Catalog stats from ANALYZE are
-    * deliberately NOT trusted: they survive table rewrites, and a stale
-    * count silently resizes LSH planes/bands — correctness-relevant, not
-    * just a costing hint. An UNmaterialized cache falls back to its
-    * child's stats, which can carry exactly those stale catalog counts,
-    * so it must count(). */
-  def rowCountFast(df: DataFrame): Long =
-    exactStatsRowCount(df).getOrElse(df.count())
-
-  /** The exact-by-construction whitelist behind [[rowCountFast]], exposed
-    * so probes that COMBINE the count with other per-corpus facts in one
-    * job (x_sim_lsh's dims+count agg) apply the SAME trust policy instead
-    * of reading raw `stats.rowCount` (which can carry stale ANALYZE
-    * counts). None = no trusted stats; run your own job. */
+  /** Row count from plan statistics, when they are EXACT by construction:
+    * Range, a MATERIALIZED cache (whose stats come from its row-count
+    * accumulator), and LocalRelation under test configs. Probes that
+    * COMBINE the count with other per-corpus facts in one job (x_sim_lsh's
+    * dims+count agg) use it instead of raw `stats.rowCount`. Catalog stats
+    * from ANALYZE are deliberately NOT trusted: they survive table
+    * rewrites, and a stale count silently resizes LSH planes/bands. An
+    * UNmaterialized cache falls back to its child's stats, which can carry
+    * exactly those stale catalog counts. None = no trusted stats; run your
+    * own job (for a parquet table, [[tableRows]] needs none). */
   def exactStatsRowCount(df: DataFrame): Option[Long] = {
     import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Range}
     import org.apache.spark.sql.execution.columnar.InMemoryRelation

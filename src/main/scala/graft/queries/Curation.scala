@@ -986,108 +986,27 @@ object Curation {
     * total_uncompressed_size summed over every row-group footer of
     * `dir/documents.parquet` — true parquet column statistics, read
     * driver-side with zero Spark jobs and zero column IO (a footer is a
-    * few KB regardless of file size). Memoized per corpus dir (the
-    * clusterLabels/fittedCentroids pattern) so repeated plan builds
-    * don't re-read footers. At 100 TB (~10⁵ GB-sized files) the sweep
-    * is ~10⁵ footer reads — parallelize over a file-list RDD or answer
-    * it from catalog statistics if the sweep ever shows up; either way
-    * it is bounded by file COUNT, unlike the full tokenize scan it
-    * replaces, which was bounded by corpus size. */
-  private val textBytesMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
+    * few KB regardless of file size). Served from the session's table
+    * metadata cache ([[graft.ParquetMeta]]), which re-reads the footers
+    * when the files change, so a rewritten corpus is sized by its new
+    * footers (shard count is output-affecting). At 100 TB (~10⁵ GB-sized
+    * files) the sweep is ~10⁵ footer reads — parallelize over a file-list
+    * RDD or answer it from catalog statistics if the sweep ever shows up;
+    * either way it is bounded by file COUNT, unlike the full tokenize scan
+    * it replaces, which was bounded by corpus size. */
   private[queries] def textBytes(s: SparkSession, d: String): Long =
-    textBytesMemo.computeIfAbsent(d, _ =>
-      sweepFooters(s, s"$d/documents.parquet")(
-        _.filter(_.getPath.toDotString == "text")
-          .map(_.getTotalUncompressedSize).sum).sum)
+    graft.ParquetMeta.footers(s, s"$d/documents.parquet").columnBytes.getOrElse("text", 0L)
 
   /** METADATA-ONLY doc_id span probe: min/max from the doc_id column's
     * row-group footer statistics — the covering span [[pack]] needs for
-    * its chunking, at zero Spark jobs (the same footer sweep as
-    * [[textBytes]], memoized per corpus dir). Falls back to a one-column
-    * min/max job only when a writer stripped the statistics. */
-  private val docIdBoundsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-
-  /** Drop the memoized footer probes for corpus dir `d` — call after an
-    * in-place rewrite of `d/documents.parquet`, the same contract as
-    * [[graft.queries.Similarity.invalidateIvfIndex]] for the IVF memo.
-    * Without it, pack chunking and shard counts keep serving the OLD
-    * footers' statistics; shard count is output-affecting, so a stale
-    * memo surfaces as oracle-divergent x_cur_shard / x_cur_pipeline
-    * results until JVM restart. */
-  def invalidateSizingProbes(d: String): Unit = {
-    textBytesMemo.remove(d)
-    docIdBoundsMemo.remove(d)
-    footerRowsMemo.keySet.removeIf(_.startsWith(d + "/"))
-    ()
-  }
-
+    * its chunking, at zero Spark jobs (the same cached footers as
+    * [[textBytes]]). Falls back to a one-column min/max job only when a
+    * writer stripped the statistics of some row group. */
   private[queries] def docIdBounds(s: SparkSession, d: String): (Long, Long) =
-    docIdBoundsMemo.computeIfAbsent(d, _ => {
-      val stats = sweepFooters(s, s"$d/documents.parquet")(
-        // force the per-file traversal INSIDE the sweep — the reader
-        // closes when each file's callback returns
-        _.filter(_.getPath.toDotString == "doc_id").map(_.getStatistics)
-          .filter(st => st != null && st.hasNonNullValue)
-          .map(st => (st.genericGetMin, st.genericGetMax)).toList)
-        .flatten
-        .collect { case (lo: java.lang.Long, hi: java.lang.Long) =>
-          (lo.longValue, hi.longValue) }
-      if (stats.nonEmpty) (stats.map(_._1).min, stats.map(_._2).max)
-      else {
-        val r = table(s, d, "documents").agg(min("doc_id"), max("doc_id")).head()
-        (r.getLong(0), r.getLong(1))
-      }
+    graft.ParquetMeta.footers(s, s"$d/documents.parquet").longBounds.getOrElse("doc_id", {
+      val r = table(s, d, "documents").agg(min("doc_id"), max("doc_id")).head()
+      (r.getLong(0), r.getLong(1))
     })
-
-  /** Driver-side parquet footer sweep: applies `f` to each file's
-    * row-group column-chunk metadata under `path` (file or directory).
-    * Bounded by file COUNT — a footer is a few KB regardless of file
-    * size — so probes built on it cost zero Spark jobs and zero column
-    * IO. At 100 TB (~10⁵ GB-sized files) parallelize over a file-list
-    * RDD or answer from catalog statistics if the sweep ever shows up. */
-  private def sweepFooters[T](s: SparkSession, path: String)(
-      f: Iterator[org.apache.parquet.hadoop.metadata.ColumnChunkMetaData] => T): Seq[T] = {
-    import scala.jdk.CollectionConverters._
-    sweepFooterMeta(s, path)(md =>
-      f(md.getBlocks.asScala.iterator.flatMap(_.getColumns.asScala)))
-  }
-
-  /** The sweep primitive behind [[sweepFooters]]/[[footerRows]]: applies
-    * `f` to each file's full footer metadata under `path`. */
-  private def sweepFooterMeta[T](s: SparkSession, path: String)(
-      f: org.apache.parquet.hadoop.metadata.ParquetMetadata => T): Seq[T] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    def leaves(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leaves)
-      else if (st.getPath.getName.endsWith(".parquet")) Seq(st) else Seq.empty
-    leaves(fs.getFileStatus(root)).map { st =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try f(r.getFooter)
-      finally r.close()
-    }
-  }
-
-  /** METADATA-ONLY row-count probe: block row counts summed over every
-    * row-group footer of `path` — zero Spark jobs, zero column IO (the
-    * [[textBytes]] treatment for row counts; rowCountFast's count()
-    * fallback is a real job per plan build on a parquet scan, the
-    * x_events_sessions cost ADVICE r17 named). Memoized per path;
-    * SIZING probes only (partition spread), never correctness. */
-  private val footerRowsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private[graft] def footerRows(s: SparkSession, path: String): Long =
-    footerRowsMemo.computeIfAbsent(path, _ =>
-      sweepFooterMeta(s, path) { md =>
-        import scala.jdk.CollectionConverters._
-        md.getBlocks.asScala.map(_.getRowCount).sum
-      }.sum)
 
   /** C4-rule blocklist, calibrated to the synthetic corpus vocabulary
     * (real deployments load the published bad-words list). */

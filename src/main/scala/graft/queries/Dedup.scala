@@ -273,9 +273,9 @@ object Dedup {
     //    Signature shuffle is (doc, band, hash) — never the text.
     "x_dedup_minhash" -> ((s, d) => {
       // sizing probe at plan-build time — the "measure the corpus, size
-      // the index" step every LSH deployment runs; catalog/plan stats
-      // satisfy it with NO job when the optimizer already knows the count
-      val corpusN = graft.Engine.rowCountFast(table(s, d, "documents"))
+      // the index" step every LSH deployment runs; the parquet footers'
+      // row counts answer it with NO job
+      val corpusN = graft.Engine.tableRows(s, d, "documents")
       val rowsPerBand = LshTuning.minhashRowsPerBand(corpusN)
       val nPerm = LshTuning.minhashBands(rowsPerBand) * rowsPerBand
       // SIZED registration: the name carries nPerm so a concurrent build
@@ -373,7 +373,7 @@ object Dedup {
       val corpus = withRecrawl(table(s, d, "documents")).select(col("doc_id"), col("text"))
       val inc = corpus.filter(col("doc_id") >= 1000000L)
       // increment ≈ corpus/50 (the recrawl rate); ~10 bits/item ≈ 1% fp
-      val items = math.max(16L, graft.Engine.rowCountFast(table(s, d, "documents")) / 50)
+      val items = math.max(16L, graft.Engine.tableRows(s, d, "documents") / 50)
       val bf = inc.agg(expr(
         s"bloom_agg(xxhash64(text), CAST($items AS BIGINT), CAST(${math.max(4096L, items * 10)} AS BIGINT))"))
         .collect()(0).getAs[Array[Byte]](0)
@@ -1095,9 +1095,9 @@ object Dedup {
     val (bsig, bkeysBn) = md5SigKeysCounted(
       batch.select(col("doc_id"), split(col("text"), " ").as("ws")))
     incrementalVerdicts(
-      s.read.parquet(s"$indexPath/minhash_keys.parquet"),
-      s.read.parquet(s"$indexPath/minhash_sig.parquet"),
-      s.read.parquet(s"$indexPath/minhash_keycounts.parquet"),
+      graft.Engine.parquet(s, s"$indexPath/minhash_keys.parquet"),
+      graft.Engine.parquet(s, s"$indexPath/minhash_sig.parquet"),
+      graft.Engine.parquet(s, s"$indexPath/minhash_keycounts.parquet"),
       bkeysBn, bsig, broadcastIncrement = true, cap)
   }
 

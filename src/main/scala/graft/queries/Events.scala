@@ -178,10 +178,10 @@ object Events {
       // above it, full-width concurrency meets >target-sized buffers —
       // the measured rotation regime (x256: 1.5 GB memfreed + 65 MB
       // disk per run without the spread, zero with it). The row count
-      // comes from parquet FOOTER metadata, memoized per corpus dir
-      // (zero jobs — rowCountFast's count() fallback was a real Spark
-      // job per plan build, the r17 ADVICE cost).
-      val n = (Curation.footerRows(s, s"$d/events.parquet") /
+      // comes from parquet FOOTER metadata (Engine.tableRows: zero jobs,
+      // where a count() is a real Spark job per plan build, the r17
+      // ADVICE cost).
+      val n = (graft.Engine.tableRows(s, d, "events") /
         sessionSpreadRows).toInt
       val base = ev(s, d).select("user_id", "event_id", "us")
       val spread = if (n > s.sparkContext.defaultParallelism)

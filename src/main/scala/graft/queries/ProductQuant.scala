@@ -212,7 +212,7 @@ object ProductQuant {
   /** Corpus-derived centroids-per-subspace (one metadata-cheap count
     * probe, the [[Similarity.ivfK]] pattern). */
   private[queries] def pqK(s: SparkSession, d: String): Int =
-    LshTuning.pqCentroids(graft.Engine.rowCountFast(table(s, d, "embeddings")))
+    LshTuning.pqCentroids(graft.Engine.tableRows(s, d, "embeddings"))
 
   /** IVF-PQ search: coarse probe from the portable flat-IVF fit (probes
     * its `nprobe` nearest cells — broadcast centroids, key-equi

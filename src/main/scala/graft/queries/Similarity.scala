@@ -420,9 +420,9 @@ object Similarity {
       .orElse(sys.env.get("SPARK_GRAFT_WIDE_ARGMAX_ROWS"))
       .map(_.toLong).getOrElse(65536L)
 
-  /** The gate decision for a corpus dir — one metadata-cheap count. */
+  /** The gate decision for a corpus dir — one footer row count, no job. */
   private[graft] def wideArgmax(s: SparkSession, d: String): Boolean =
-    graft.Engine.rowCountFast(table(s, d, "embeddings")) <= wideArgmaxRows
+    graft.Engine.tableRows(s, d, "embeddings") <= wideArgmaxRows
 
   /** Nearest-centroid cell assignment: argmax via max(struct(cos, -cid))
     * — deterministic tie-break, map-side-combinable (unlike a row_number
@@ -541,13 +541,12 @@ object Similarity {
 
   /** Corpus-derived IVF cell count shared by x_sim_ivf/_md5 and the
     * SemDeDup clustering (Dedup.x_dedup_semantic): one count probe
-    * (Engine.rowCountFast — exact stats when trustworthy, else a
-    * metadata-cheap count()) feeding LshTuning.ivfCells, so the
-    * within-cell quadratic stays bounded at every scale while the
-    * 500-vector gate corpora derive exactly the k=16 the static DuckDB
-    * oracles are generated with. */
+    * (Engine.tableRows — the footers' row counts, no job) feeding
+    * LshTuning.ivfCells, so the within-cell quadratic stays bounded at
+    * every scale while the 500-vector gate corpora derive exactly the
+    * k=16 the static DuckDB oracles are generated with. */
   private[queries] def ivfK(s: SparkSession, d: String): Int =
-    LshTuning.ivfCells(graft.Engine.rowCountFast(table(s, d, "embeddings")))
+    LshTuning.ivfCells(graft.Engine.tableRows(s, d, "embeddings"))
 
   private def ivfCentroids(s: SparkSession, d: String, k: Int): DataFrame =
     memoizedCentroids(s, d, s"xx$k") {
@@ -604,7 +603,7 @@ object Similarity {
   /** Corpus-derived two-level sizing (one metadata-cheap count probe,
     * the [[ivfK]] pattern). */
   private[queries] def ivf2K(s: SparkSession, d: String): (Int, Int) =
-    LshTuning.ivfTwoLevel(graft.Engine.rowCountFast(table(s, d, "embeddings")))
+    LshTuning.ivfTwoLevel(graft.Engine.tableRows(s, d, "embeddings"))
 
   /** Nearest-FINE-centroid assignment within each vector's coarse cell:
     * the join is KEY-EQUI on ccid — a shuffle (or bucketed-table) join

@@ -266,14 +266,13 @@ class CurationSpec extends SparkSpecBase {
     // in-place rewrite: much bigger text, wider id span
     Seq((0L, ("x " * 200).trim), (9L, ("y " * 200).trim)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    // memoized: still serves the OLD footers — the documented hazard the
-    // invalidation hook exists for (shard count is output-affecting)
-    assert(Curation.textBytes(spark, dir) == b1)
-    assert(Curation.docIdBounds(spark, dir) == ((1L, 5L)))
-    Curation.invalidateSizingProbes(dir)
+    // no invalidation call: the rewrite's new part files change the
+    // table's fingerprint, so the probes read the NEW footers at once
+    // (shard count is output-affecting)
     assert(Curation.textBytes(spark, dir) > b1,
-      "post-invalidation byte mass must come from the NEW footers")
+      "post-rewrite byte mass must come from the NEW footers")
     assert(Curation.docIdBounds(spark, dir) == ((0L, 9L)))
+    assert(graft.Engine.tableRows(spark, dir, "documents") == 2L)
   }
 
   test("mixture: alpha-rates match a driver recompute; small sources upweighted") {

@@ -107,7 +107,7 @@ class EventsSpec extends SparkSpecBase {
     // The forced target derives from the corpus so the branch trips at
     // ~4× fleet width (a few hundred partitions), not footerRows/10
     // tasks (tens of thousands of ~10-row tasks at gate scale)
-    val rows = Curation.footerRows(spark, s"$sf/events.parquet")
+    val rows = graft.Engine.tableRows(spark, sf, "events")
     val forced = math.max(1L, rows / (4L * spark.sparkContext.defaultParallelism))
     sys.props("graft.sessionSpreadRows") = forced.toString
     try {
@@ -117,7 +117,7 @@ class EventsSpec extends SparkSpecBase {
         "spread and plain sessionization branches diverged")
     } finally sys.props.remove("graft.sessionSpreadRows")
     // the sizing probe reads parquet footers only — exact vs a real count
-    assert(Curation.footerRows(spark, s"$sf/events.parquet") ==
+    assert(graft.Engine.tableRows(spark, sf, "events") ==
       spark.read.parquet(s"$sf/events.parquet").count())
   }
 

@@ -516,12 +516,60 @@ class PlanQualitySpec extends SparkSpecBase {
     // a relation whose optimized plan carries an exact-by-construction
     // rowCount (Range, LocalRelation, materialized caches; ANALYZE'd
     // catalog stats are deliberately NOT trusted — they go stale)
-    val jobs = jobsDuring { assert(graft.Engine.rowCountFast(spark.range(12345).toDF()) == 12345L) }
-    assert(jobs == 0, s"stats-backed rowCountFast launched $jobs jobs")
-    // a bare parquet read publishes no rowCount → falls back to one count
+    val jobs = jobsDuring {
+      assert(graft.Engine.exactStatsRowCount(spark.range(12345).toDF()) == Some(12345L))
+    }
+    assert(jobs == 0, s"stats-backed exactStatsRowCount launched $jobs jobs")
+    // a bare parquet read publishes no rowCount → no trusted stats; the
+    // footer row count answers for a parquet table instead
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     assert(docs.queryExecution.optimizedPlan.stats.rowCount.isEmpty)
-    assert(graft.Engine.rowCountFast(docs) == 500L)
+    assert(graft.Engine.exactStatsRowCount(docs).isEmpty)
+    assert(graft.Engine.tableRows(spark, sf, "documents") == 500L)
+  }
+
+  test("table metadata cache: a build over unchanged tables starts no Spark job") {
+    val q = graft.SparkEntry.queries("b_join_multiway")
+    q(spark, sf) // the first build may infer the four schemas
+    val jobs = jobsDuring { q(spark, sf); () }
+    assert(jobs == 0, s"second build of b_join_multiway launched $jobs jobs")
+    val tables = new java.io.File(sf).list().toSeq.filter(_.endsWith(".parquet"))
+      .map(_.stripSuffix(".parquet")).sorted
+    assert(tables.size == 10, s"sf0.001 tables: $tables")
+    var rows = Map.empty[String, Long]
+    val probeJobs = jobsDuring {
+      rows = tables.map(t => t -> graft.Engine.tableRows(spark, sf, t)).toMap
+    }
+    assert(probeJobs == 0, s"tableRows launched $probeJobs jobs")
+    tables.foreach(t => assert(rows(t) == graft.Engine.table(spark, sf, t).count(), t))
+  }
+
+  test("table metadata cache: a rewritten table is seen at once; self-joins get fresh ids") {
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-meta").toString
+    try {
+      Seq((1L, "a"), (1L, "b"), (2L, "c")).toDF("k", "v")
+        .write.mode("overwrite").parquet(s"$dir/t.parquet")
+      assert(graft.Engine.table(spark, dir, "t").columns.toSeq == Seq("k", "v"))
+      assert(graft.Engine.tableRows(spark, dir, "t") == 3L)
+      graft.Engine.table(spark, dir, "t").count() // both memo parts filled
+      Seq((1L, "a", 10), (1L, "b", 20), (1L, "d", 30), (2L, "c", 40), (3L, "e", 50))
+        .toDF("k", "v", "w").write.mode("overwrite").parquet(s"$dir/t.parquet")
+      val t = graft.Engine.table(spark, dir, "t")
+      assert(t.columns.toSeq == Seq("k", "v", "w"), "second read kept the old schema")
+      assert(graft.Engine.tableRows(spark, dir, "t") == 5L, "tableRows kept the old count")
+      assert(t.agg(sum("w")).head().getLong(0) == 150L)
+      // two reads of one table: a shared plan would resolve both sides to
+      // the same attributes and the join condition to `k = k`
+      val a = graft.Engine.table(spark, dir, "t")
+      val b = graft.Engine.table(spark, dir, "t")
+      val pairs = a.join(b, a("k") === b("k") && a("v") < b("v")).count()
+      val oracle = t.groupBy("k").agg(count(lit(1)).as("n")).collect()
+        .map { r => val n = r.getLong(1); n * (n - 1) / 2 }.sum
+      assert(pairs == oracle && pairs == 3L, s"self-join pairs $pairs != $oracle")
+      assert(a.join(b, a("k") === b("k")).select(a("w")).filter(col("w") === 50).count() == 1L)
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(dir))
   }
 
   test("x_cur_shard's sizing probe is metadata-only: plan build adds no job") {
@@ -542,7 +590,7 @@ class PlanQualitySpec extends SparkSpecBase {
     // jobs); everything else the pipeline derives at plan-build time —
     // pack chunking, shard count — must come from footer metadata
     graft.queries.Dedup.clusterLabels(spark, sf).count()
-    Curation.queries("x_cur_shard")(spark, sf) // warms textBytes/docIdBounds memos
+    Curation.queries("x_cur_shard")(spark, sf) // warms the cached footers and schema
     val baseline = jobsDuring { spark.read.parquet(s"$sf/documents.parquet"); () }
     val built = jobsDuring { Curation.queries("x_cur_pipeline")(spark, sf); () }
     assert(built <= baseline,
